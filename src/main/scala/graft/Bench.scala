@@ -41,8 +41,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   // SPARK_GRAFT_REPS: optional override (the driver never sets it); the
   // default stays 3 so records remain rep-comparable across rounds.
-  private final val Reps =
-    sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
+  private final val Reps = Env.positiveInt("SPARK_GRAFT_REPS").getOrElse(3)
   private final val RepBudgetSec = 20.0
   // r16's driver bench timed out (rc=124, no record at all — strictly
   // worse than any precision loss). Two wall-clock trims, both OUTSIDE
@@ -57,8 +56,7 @@ object Bench {
   //      JVM start): once past it, remaining queries run ONE rep instead
   //      of three. A degraded-precision record always beats rc=124.
   //      The record self-describes via "deadline_capped".
-  private final val DeadlineSec =
-    sys.env.get("SPARK_GRAFT_DEADLINE_SEC").map(_.toDouble).getOrElse(2400.0)
+  private final val DeadlineSec = Env.positiveDouble("SPARK_GRAFT_DEADLINE_SEC").getOrElse(2400.0)
   private val startNanos = System.nanoTime()
   private def elapsedSec: Double = (System.nanoTime() - startNanos) / 1e9
 
@@ -70,14 +68,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder().getOrCreate()
     // SPARK_GRAFT_ONLY=q1,q2 narrows the run to named queries — an
     // iteration aid for profiling a single plan; the driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)

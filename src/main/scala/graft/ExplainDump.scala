@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round aid: dump `explain("formatted")` for the named
@@ -19,14 +18,7 @@ object ExplainDump {
     val suffix = args(2)
     val sfDir = if (args.length > 3) args(3)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder().getOrCreate()
     val names =
       if (names0 == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else names0.split(",").map(_.trim).filter(_.nonEmpty).toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Differential-SQL fuzz harness (round-12 verdict item 5): runs the
@@ -22,14 +21,7 @@ object Fuzz {
     val outDir = args(1)
     val seed = if (args.length > 2) args(2).toLong else 12L
     val n = if (args.length > 3) args(3).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().config("spark.log.level", "WARN").getOrCreate()
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings"))
       graft.catalog.TableCatalog.load(spark, sfDir, t).createOrReplaceTempView(t)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Nested/collection-type differential fuzz harness (round-13 verdict
@@ -28,14 +27,7 @@ object FuzzNested {
     val seed = if (args.length > 2) args(2).toLong else 12L
     val n = if (args.length > 3) args(3).toInt else 240
     val rows = if (args.length > 4) args(4).toLong else 4000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().config("spark.log.level", "WARN").getOrCreate()
     graft.catalog.TableCatalog.register(spark, sfDir)
     val nestedPath = s"$outDir/_tables/nested"
     graft.generate.NestedGen.write(spark, rows, nestedPath)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.Random
 
 /** Full-sweep runner for the streaming parity fuzz
@@ -20,14 +19,7 @@ object FuzzStream {
     val nSets = if (args.length > 0) args(0).toInt else 20
     val seeds = if (args.length > 1) args(1).split(",").map(_.toLong).toSeq
                 else Seq(12L, 99L, 7L, 42L, 2026L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder().getOrCreate()
     val work = java.nio.file.Files.createTempDirectory("stfuzz").toString
     var total = 0
     var failures = 0

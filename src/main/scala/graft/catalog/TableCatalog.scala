@@ -24,10 +24,6 @@ object TableCatalog {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, table: String): DataFrame = {
-    // every query path loads through here — registering the native
-    // function family at load time (idempotent) means no operator can
-    // reach a `call_function("graft_*", ...)` on an unregistered session
-    graft.plans.GraftFunctions.register(spark)
     // The events table's `ts` physical encoding has varied across testdata
     // generations: TIMESTAMP(NANOS) (readable only via nanosAsLong, as a
     // long) vs timestamp[us] without timezone (read as TIMESTAMP_NTZ).

@@ -17,28 +17,16 @@ object Formats {
   def rfc3339(c: Column): Column =
     date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")
 
-  /** RFC3339 with millisecond precision (reference keeps sub-second when present). */
-  def rfc3339Millis(c: Column): Column =
-    date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-
-  /** ISO date — `StructToJsonConverter.java:62`. */
-  def isoDate(c: Column): Column = date_format(c, "yyyy-MM-dd")
-
   /** ISO local time from a timestamp — `RecordToStructConverter.java:243-249`. */
   def isoLocalTime(c: Column): Column = date_format(c, "HH:mm:ss")
 
-  /** bytes → base64 — `StructToJsonConverter.java:56`, `StructUtil.java:60`. */
-  def base64Bytes(c: Column): Column = base64(c)
-
-  /** date ⇄ epoch days — Avro `date` logical type
+  /** date → epoch days — Avro `date` logical type
     * (`StructToRecordConverter.java:75-79`). */
   def toEpochDays(c: Column): Column = datediff(c, to_date(lit("1970-01-01")))
-  def fromEpochDays(c: Column): Column = date_add(to_date(lit("1970-01-01")), c.cast("int"))
 
   /** timestamp ⇄ epoch millis/micros/seconds
     * (`StructToRecordConverter.java:86`, `StructToTableRowConverter.java:90`). */
   def toEpochMillis(c: Column): Column = unix_millis(c)
-  def fromEpochMillis(c: Column): Column = timestamp_millis(c)
   def toEpochMicros(c: Column): Column = unix_micros(c)
   def fromEpochMicros(c: Column): Column = timestamp_micros(c)
   def toEpochSeconds(c: Column): Column = unix_seconds(c)
@@ -52,23 +40,6 @@ object Formats {
     when(s.contains("."),
       regexp_replace(regexp_replace(s, "0+$", ""), "\\.$", ""))
       .otherwise(s)
-  }
-
-  /** UTF-8 byte length > 1500 → exclude from index
-    * (`RecordToEntityConverter.java:126-129`). */
-  def overIndexLimit(c: Column): Column = octet_length(c) > 1500
-
-  /** sha512 hex of a column — generator payloads (`DummyToMutation.java:510`). */
-  def sha512Hex(c: Column): Column = sha2(c.cast("string"), 512)
-
-  /** Deterministic UUID-shaped string derived from a column (seeded stand-in
-    * for the reference's random `UUID.randomUUID()`, `DummyToMutation.java:474`).
-    * Layout of a v4 UUID but fully reproducible: md5 hex re-punctuated. */
-  def deterministicUuid(c: Column): Column = {
-    val h = md5(c.cast("string"))
-    concat_ws("-",
-      substring(h, 1, 8), substring(h, 9, 4), substring(h, 13, 4),
-      substring(h, 17, 4), substring(h, 21, 12))
   }
 
   /** Split-key of the dynamic sinks (P15): field value as string, null → ""

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 
 /** Multi-dimensional data-layout keys (Z-order / Morton curves) for
   * locality-preserving file clustering — the write-side optimization
@@ -65,22 +66,18 @@ object Layout {
     * functions evaluate interpreted with a struct allocation per level
     * per row — 16 s at sf0.1 where Z-order runs in tenths — and a
     * per-level column unroll doubles the expression tree per level
-    * because each level reads BOTH prior coordinates.) `spark` is
-    * needed only for the idempotent function registration. */
-  def hilbertKey(spark: org.apache.spark.sql.SparkSession,
-                 xCol: Column, yCol: Column, bits: Int = 16): Column = {
+    * because each level reads BOTH prior coordinates.) */
+  def hilbertKey(xCol: Column, yCol: Column, bits: Int = 16): Column = {
     require(bits > 0 && 2 * bits <= 62,
       s"key width ${2 * bits} must be in (0, 62]")
-    graft.plans.GraftFunctions.register(spark)
-    call_function("graft_hilbert_key",
-      xCol.cast("long"), yCol.cast("long"), lit(bits))
+    GraftFunctions.hilbertKey(xCol.cast("long"), yCol.cast("long"), bits)
   }
 
   /** Physically cluster `df` along the Hilbert curve of (xCol, yCol) —
     * same one-range-shuffle cost as [[zOrderCluster]], tighter boxes. */
   def hilbertCluster(df: DataFrame, xCol: Column, yCol: Column,
                      bits: Int = 16, numRanges: Int = 0): DataFrame = {
-    val key = hilbertKey(df.sparkSession, xCol, yCol, bits)
+    val key = hilbertKey(xCol, yCol, bits)
     val ranges = if (numRanges > 0) numRanges
       else df.sparkSession.sessionState.conf.numShufflePartitions
     df.repartitionByRange(ranges, key).sortWithinPartitions(key)

@@ -36,12 +36,6 @@ object TextFunctions {
       sequence(lit(0), size(toks) - k),
       i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + j + 1)): _*)))
 
-  /** One MinHash component: md5 seeded by the hash index, minimized
-    * lexicographically over the shingle set (aggregated with `min` by the
-    * caller). */
-  def minhashComponent(hashIdx: Column, shingle: Column): Column =
-    md5(concat(hashIdx.cast("string"), lit("|"), shingle))
-
   /** SQL fragment: bit `bit%4` of md5 hex digit `1 + bit/4` of column
     * `h` — the per-token bit source for SimHash. `bit` in [0, 64). Emitted
     * as a SQL string because nested lambda-variable arithmetic reads better

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 
 /** Deterministic quality-classifier training — the fastText/DCLM-style
   * filtering step modern curation pipelines run FIRST: a linear model
@@ -59,12 +60,11 @@ object Classifier {
     require(n >= 1, s"gram size must be >= 1, got $n")
     require(buckets >= 1 && buckets <= graft.plans.GramBucketShares.MaxBuckets,
       s"buckets must be in [1, ${graft.plans.GramBucketShares.MaxBuckets}], got $buckets")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // coalesce('') keeps the historical null contract: null text scored
     // all-zero shares (the old when-chain's otherwise branch), and the
     // empty string has no grams — same all-zero result
-    val shares = call_function("graft_gram_bucket_shares",
-      lower(coalesce(col(textCol), lit(""))), lit(n), lit(buckets))
+    val shares = GraftFunctions.gramBucketShares(
+      lower(coalesce(col(textCol), lit(""))), n, buckets)
     val x = concat(array(lit(1.0)), shares)
     df.select(col(idCol) +: x.as("x") +: keep: _*)
   }

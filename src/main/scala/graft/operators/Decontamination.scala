@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 import graft.functions.TextFunctions._
 
 /** Benchmark decontamination: flag training documents whose k-shingle
@@ -34,7 +35,6 @@ object Decontamination {
                        evalPred: Column, k: Int = 3,
                        minFrac: Double = 0.05): DataFrame = {
     val df = Dedup.widen(df0)
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // 8-byte hashed shingles (see Dedup.shingleHash): the overlap join
     // keys and the broadcast eval set carry longs, not shingle strings.
     // The set comes from the native ShingleHashSet kernel (r16) — same
@@ -45,7 +45,7 @@ object Decontamination {
         d.select(col(idCol), tokens(col(textCol)).as("toks"))
           .filter(size(col("toks")) >= k),
         Seq(col(idCol)),
-        call_function("graft_shingle_hash_set", col("toks"), lit(k)),
+        GraftFunctions.shingleHashSet(col("toks"), k),
         "s")
     val evalSh = broadcast(shingleStream(df.filter(evalPred))
       .select("s").distinct().withColumn("hit", lit(1)))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for training-data pipelines, designed for the
@@ -89,21 +90,6 @@ object Dedup {
           .otherwise("unchanged").as("status"))
   }
 
-  /** Per-document MinHash signature, exploded as (id, hash_idx, sig) rows.
-    * `numHashes` independent hash functions h_i(s) = md5(i || '|' || s),
-    * each minimized lexicographically over the distinct k-shingle set.
-    * Long (id, h, sig) format for key-based consumers; built by
-    * exploding the in-row signature array — see [[minhashSignatureArray]]
-    * for the map-only core. */
-  def minhashSignatures(df0: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 16, k: Int = 3): DataFrame =
-    minhashSignatureArray(df0, idCol, textCol, numHashes, k)
-      // outer + null-filter: see SafeExplode (the inferred size() filter
-      // would re-run the whole minhash signature computation)
-      .select(col(idCol), posexplode_outer(col("sig")).as(Seq("h", "sig")))
-      .filter(col("h").isNotNull)
-      .select(col(idCol), col("h").cast("long").as("h"), col("sig"))
-
   /** Per-document MinHash signature as ONE array column (component i at
     * position i+1) — the layout banding and estimation consume without
     * further shuffles. `toksCol` optionally names a precomputed token
@@ -124,13 +110,12 @@ object Dedup {
     // ONE codegen'd pass over the shingle array instead of numHashes
     // stacked transform+array_min HOFs (bit-identical hex values; see the
     // kernel scaladoc for the equivalence argument)
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
         toksCol.map(col).getOrElse(tokens(col(textCol))).as("toks"))
       .filter(size(col("toks")) >= k)
       .select(col(idCol), shingles(col("toks"), k).as("sh"))
       .select(col(idCol),
-        call_function("graft_minhash_signature", col("sh"), lit(numHashes)).as("sig"))
+        GraftFunctions.minhashSignature(col("sh"), numHashes).as("sig"))
   }
 
   /** MinHash + LSH near-duplicate pairs. Signature arrays are banded
@@ -285,11 +270,10 @@ object Dedup {
     // (bit-identical; see the kernel scaladoc for the equivalence). The
     // size() filter is unchanged: transform preserved length, so
     // size(hs) > 0 ⇔ size(toks) > 0.
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col(idCol),
-        call_function("graft_simhash", col("toks"), lit(bits)).as("simhash"))
+        GraftFunctions.simhash(col("toks"), bits).as("simhash"))
   }
 
   /** SimHash near-duplicate pairs with chunk blocking: a 48-bit hash is
@@ -341,7 +325,6 @@ object Dedup {
                                            textCol: String, k: Int,
                                            keep: Seq[Column] = Nil,
                                            cache: Boolean = true): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol) +: keep :+ tokens(col(textCol)).as("toks"): _*)
       .filter(size(col("toks")) >= k)
     // keep expressions were evaluated in the select above; from here on
@@ -351,8 +334,8 @@ object Dedup {
     // kernel — one pass over the token array instead of shingle-string /
     // hex-string / conv / array_distinct / sort_array intermediates
     // (bit-identical; see the kernel scaladoc for the equivalence)
-    val out = base.select(carried :+ call_function("graft_shingle_hash_set",
-        col("toks"), lit(k)).as("sh"): _*)
+    val out = base.select(carried :+ GraftFunctions.shingleHashSet(
+        col("toks"), k).as("sh"): _*)
       .withColumn("n", size(col("sh")).cast("long"))
     if (cache) out.cache() else out
   }
@@ -429,7 +412,6 @@ object Dedup {
   def ngramJaccard(df0: DataFrame, idCol: String, textCol: String,
                    k: Int = 3, minJaccard: Double = 0.2,
                    maxDf: Long = Long.MaxValue): DataFrame = {
-    graft.plans.GraftFunctions.register(df0.sparkSession)
     val df = widen(df0)
     val t = minJaccard
     // capped mode consumes the uncapped frame exactly once (the explode
@@ -492,7 +474,7 @@ object Dedup {
       .join(docSh.select(col(idCol).as("d1"), col("sh").as("sha"), col("n").as("na")), "d1")
       .join(docSh.select(col(idCol).as("d2"), col("sh").as("shb"), col("n").as("nb")), "d2")
       .withColumn("inter",
-        call_function("graft_sorted_intersect_count", col("sha"), col("shb")))
+        GraftFunctions.sortedIntersectCount(col("sha"), col("shb")))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= minJaccard)
@@ -548,7 +530,6 @@ object Dedup {
 
   def containment(df0: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, minContainment: Double = 0.8): DataFrame = {
-    graft.plans.GraftFunctions.register(df0.sparkSession)
     val df = widen(df0)
     val t = minContainment
     val docSh = hashedShingleSets(df, idCol, textCol, k)
@@ -568,7 +549,7 @@ object Dedup {
       .join(docSh.select(col(idCol).as("d1"), col("sh").as("sha"), col("n").as("na")), "d1")
       .join(docSh.select(col(idCol).as("d2"), col("sh").as("shb")), "d2")
       .withColumn("inter",
-        call_function("graft_sorted_intersect_count", col("sha"), col("shb")))
+        GraftFunctions.sortedIntersectCount(col("sha"), col("shb")))
       .withColumn("containment", col("inter").cast("double") / col("na"))
       .filter(col("containment") >= minContainment)
       .select("d1", "d2", "containment")
@@ -593,8 +574,7 @@ object Dedup {
       col(s"a.$blockCol") === col(s"b.$blockCol") &&
         col(s"a.$idCol") < col(s"b.$idCol"))
     pairs.select(col(s"a.$idCol").as("d1"), col(s"b.$idCol").as("d2"),
-        Vectors.cosineNative(df0.sparkSession,
-          col(s"a.$vecCol"), col(s"b.$vecCol")).as("cos"))
+        Vectors.cosineNative(col(s"a.$vecCol"), col(s"b.$vecCol")).as("cos"))
       .filter(col("cos") >= minCosine)
   }
 
@@ -642,7 +622,7 @@ object Dedup {
     // un-caching the very self-join it exists for (same convention as
     // semanticDedup's assignment cache, documented there)
     val assigned = widen(df0).withColumn("cluster_id",
-      Vectors.nearestCidExpr(df0.sparkSession, col(vecCol), cents))
+      Vectors.nearestCidExpr(col(vecCol), cents))
       .cache()
     embeddingNearDup(assigned, idCol, vecCol, "cluster_id", minCosine)
   }
@@ -1017,7 +997,6 @@ object Dedup {
     * Output: (idCol, cluster_id, kept) — one row per input vector. */
   def semanticDedup(df0: DataFrame, idCol: String, vecCol: String,
                     k: Int = 0, iters: Int = 2, tau: Double = 0.45): DataFrame = {
-    val spark = df0.sparkSession
     val kk = if (k <= 0) autoK(df0) else k
     val cents = Vectors.kmeansTrain(df0, idCol, vecCol, kk, iters)
     // cached: the assignment projection feeds three consumers (both
@@ -1028,13 +1007,13 @@ object Dedup {
     // back onto the corpus (the former kmeansAssign-join shape paid a
     // corpus-sized shuffle for what is a projection).
     val withC = widen(df0).select(col(idCol), col(vecCol).as("v"))
-      .withColumn("cluster_id", Vectors.nearestCidExpr(spark, col("v"), cents))
+      .withColumn("cluster_id", Vectors.nearestCidExpr(col("v"), cents))
       .cache()
     val dropped = withC.select(col("cluster_id"), col(idCol).as("d1"), col("v").as("v1"))
       .join(withC.select(col("cluster_id"), col(idCol).as("d2"), col("v").as("v2")),
         "cluster_id")
       .filter(col("d1") < col("d2"))
-      .filter(Vectors.cosineNative(spark, col("v1"), col("v2")) >= tau)
+      .filter(Vectors.cosineNative(col("v1"), col("v2")) >= tau)
       .select(col("d2").as(idCol)).distinct()
       .withColumn("is_dropped", lit(true))
     withC.join(dropped, Seq(idCol), "left")

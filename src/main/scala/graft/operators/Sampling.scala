@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 
 /** Deterministic (hash-based) sampling for training-data curation.
   * `rand()`-based sampling (`df.sample`, `stat.sampleBy`) changes with
@@ -19,18 +20,14 @@ object Sampling {
     * prefix comes from the native kernel (graft.plans.Md5PrefixLong) —
     * bit-identical to the conv(substring(md5(...), 1, 6), 16, 10) column
     * form it replaces, minus the hex/substring/conv string churn paid
-    * per row by every hash-gated sampler. Callers hold a DataFrame and
-    * register GraftFunctions (TableCatalog.load does it for query paths;
-    * the operator entries below do it for direct library use). */
+    * per row by every hash-gated sampler. */
   def hashUnit(key: Column, seed: String = ""): Column =
-    (call_function("graft_md5_prefix_long",
-        concat(key.cast("string"), lit(seed)), lit(6))
+    (GraftFunctions.md5PrefixLong(concat(key.cast("string"), lit(seed)), 6)
       .cast("double") / lit(16777216.0))
 
   /** Keep ~`rate` of rows, deterministically. */
   def hashSample(df: DataFrame, keyCol: String, rate: Double,
                  seed: String = ""): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.filter(hashUnit(col(keyCol), seed) < rate)
   }
 
@@ -46,7 +43,6 @@ object Sampling {
                 fractions: Seq[(String, Double)] =
                   Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
                 seed: String = "", splitCol: String = "split"): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(fractions.nonEmpty && fractions.forall(_._2 > 0),
       s"fractions must be positive, got $fractions")
     require(math.abs(fractions.map(_._2).sum - 1.0) < 1e-9,
@@ -70,7 +66,6 @@ object Sampling {
   def stratifiedHashSample(df: DataFrame, keyCol: String, strataCol: String,
                            rates: Map[String, Double],
                            seed: String = ""): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val rateExpr = rates.foldLeft(lit(1.0)) { case (acc, (stratum, r)) =>
       when(col(strataCol) === stratum, lit(r)).otherwise(acc)
     }
@@ -110,7 +105,6 @@ object Sampling {
   def temperatureSample(df: DataFrame, keyCol: String, strataCol: String,
                         alpha: Double = 0.5, targetFrac: Double = 0.5,
                         seed: String = ""): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val counts = df.groupBy(col(strataCol))
       .agg(count(lit(1)).as("n_stratum"))
     // sum_w accumulates in decimal: a plain double sum merges partials
@@ -148,7 +142,6 @@ object Sampling {
   def mixtureSample(df: DataFrame, keyCol: String, strataCol: String,
                     targets: Map[String, Double],
                     seed: String = ""): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(targets.nonEmpty, "mixtureSample needs at least one target")
     require(targets.values.forall(_ > 0), "targets must be positive")
     val spark = df.sparkSession
@@ -192,10 +185,8 @@ object Sampling {
     * Output: input columns + `skey`. */
   def weightedSample(df: DataFrame, keyCol: String, weightCol: String,
                      k: Int, seed: String = ""): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(k >= 1, s"sample size must be >= 1, got $k")
-    val u = (call_function("graft_md5_prefix_long",
-        concat(col(keyCol).cast("string"), lit(seed)), lit(6))
+    val u = (GraftFunctions.md5PrefixLong(concat(col(keyCol).cast("string"), lit(seed)), 6)
       .cast("double") + lit(0.5)) / lit(16777216.0)
     df.filter(col(weightCol).isNotNull && col(weightCol) > 0)
       .withColumn("skey", round(-log(u) / col(weightCol).cast("double"), 9))
@@ -222,7 +213,6 @@ object Sampling {
     * zero-token documents drop out (no features, no weight). */
   def dsirWeights(df0: DataFrame, idCol: String, textCol: String,
                   targetPred: Column, buckets: Int = 256): DataFrame = {
-    graft.plans.GraftFunctions.register(df0.sparkSession)
     require(buckets >= 2 && buckets <= (1 << 24),
       s"buckets out of range: $buckets")
     val k = Iterator.from(1).find(k => math.pow(16, k) >= buckets).get
@@ -236,7 +226,7 @@ object Sampling {
     // paired A/B — the two single-level map-side-combined aggregates
     // below are the cheaper shape)
     val bk = toks.withColumn("b",
-      call_function("graft_md5_prefix_long", col("w"), lit(k)) % buckets)
+      GraftFunctions.md5PrefixLong(col("w"), k) % buckets)
     val model = bk.groupBy("b").agg(
       sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
       sum(when(!col("is_t"), 1L).otherwise(0L)).as("cs"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 import graft.functions.TextFunctions.md5BitSql
 import graft.operators.Dedup.widen
 
@@ -51,8 +52,7 @@ object Similarity {
     val scored = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
       .join(q, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        Vectors.cosineNative(corpus0.sparkSession,
-          col("qv"), col("nv")).as("cos"))
+        Vectors.cosineNative(col("qv"), col("nv")).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -84,14 +84,12 @@ object Similarity {
                        prefixDims: Int = 16, candidates: Int = 50): DataFrame = {
     require(prefixDims >= 1, s"prefixDims must be positive, got $prefixDims")
     require(candidates >= k, s"candidate pool $candidates smaller than k $k")
-    val spark = corpus0.sparkSession
     val corpus = widen(corpus0)
     val q = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv")))
     val coarse = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
       .join(q, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        Vectors.cosineNative(spark,
-          slice(col("qv"), 1, prefixDims),
+        Vectors.cosineNative(slice(col("qv"), 1, prefixDims),
           slice(col("nv"), 1, prefixDims)).as("ccos"))
     val wc = Window.partitionBy("qid").orderBy(col("ccos").desc, col("nid").asc)
     val pool = coarse.withColumn("crk", row_number().over(wc))
@@ -101,7 +99,7 @@ object Similarity {
       .join(q, "qid")
       .join(corpus.select(col(idCol).as("nid"), col(vecCol).as("nv")), "nid")
       .select(col("qid"), col("nid"),
-        Vectors.cosineNative(spark, col("qv"), col("nv")).as("cos"))
+        Vectors.cosineNative(col("qv"), col("nv")).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     rescored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -134,13 +132,13 @@ object Similarity {
     require(cents.nonEmpty, "hardNegatives needs a non-empty centroid model")
     val q = broadcast(queries
       .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .withColumn("q_cid", Vectors.nearestCidExpr(spark, col("qv"), cents)))
+      .withColumn("q_cid", Vectors.nearestCidExpr(col("qv"), cents)))
     val scored = corpus
       .select(col(idCol).as("nid"), col(vecCol).as("nv"))
-      .withColumn("n_cid", Vectors.nearestCidExpr(spark, col("nv"), cents))
+      .withColumn("n_cid", Vectors.nearestCidExpr(col("nv"), cents))
       .join(q, col("qid") =!= col("nid") && col("q_cid") =!= col("n_cid"))
       .select(col("qid"), col("nid"),
-        Vectors.cosineNative(spark, col("qv"), col("nv")).as("cos"))
+        Vectors.cosineNative(col("qv"), col("nv")).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -157,10 +155,9 @@ object Similarity {
     * every generated-class cache eviction in multi-query workloads.) */
   def lshBuckets(df0: DataFrame, idCol: String, vecCol: String,
                  planes: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.register(df0.sparkSession)
     val df = widen(df0)
     df.select(col(idCol),
-      call_function("graft_hyperplane_bucket", col(vecCol), lit(planes)).as("bucket"))
+      GraftFunctions.hyperplaneBucket(col(vecCol), planes).as("bucket"))
   }
 
   /** IVF-style ANN: a deterministic coarse quantizer (every
@@ -204,15 +201,15 @@ object Similarity {
     // in-row top-nprobe probe list, exploded to one row per probed list —
     // the fan-out is nprobe × |queries|, never k × |corpus|
     val assign = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-      .withColumn("n_cid", Vectors.nearestCidExpr(spark, col("nv"), cents))
+      .withColumn("n_cid", Vectors.nearestCidExpr(col("nv"), cents))
     val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("cid",
-        explode_outer(Vectors.nearestCidsExpr(spark, col("qv"), cents, nprobe)))
+        explode_outer(Vectors.nearestCidsExpr(col("qv"), cents, nprobe)))
       .filter(col("cid").isNotNull) // outer+filter: see SafeExplode
     val scored = broadcast(probes).join(assign, col("cid") === col("n_cid") &&
         col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        Vectors.cosineNative(spark, col("qv"), col("nv")).as("cos"))
+        Vectors.cosineNative(col("qv"), col("nv")).as("cos"))
       .distinct() // a neighbor can surface via multiple probed centroids
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w).cast("long"))
@@ -238,10 +235,10 @@ object Similarity {
     * Bit-identical to the `array_max(struct(cosineSafe, -cid))` column
     * form it replaced at the three PQ argmax sites, but constant
     * compile cost instead of an O(ks·sub) unrolled tree per subspace
-    * per query. Caller must have run `GraftFunctions.register`. */
+    * per query. */
   private def bestCidZs(sv: Column, cb: Seq[(Long, Array[Float])]): Column =
-    element_at(call_function("graft_nearest_centroids_zs", sv,
-      typedLit(cb.map { case (cid, cv) => (cid, cv.toSeq) }), lit(1)), 1)
+    element_at(GraftFunctions.nearestCentroids(sv,
+      typedLit(cb.map { case (cid, cv) => (cid, cv.toSeq) }), 1, zeroSafe = true), 1)
 
   /** Product-quantization codebooks (Jégou et al. 2011, TPAMI "Product
     * Quantization for Nearest Neighbor Search"): the vector space splits
@@ -260,7 +257,6 @@ object Similarity {
     val sub = dims / m
     val spark = corpus0.sparkSession
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val corpus = widen(corpus0)
     // All m quantizers train FUSED — per Lloyd round, ONE corpus pass
     // computes every subspace's in-row argmax (6-dp cosine vs literal
@@ -318,7 +314,6 @@ object Similarity {
     * Output: (idCol, code_0 .. code_{m-1}). */
   def pqEncode(corpus0: DataFrame, idCol: String, vecCol: String,
                cbs: Seq[Seq[(Long, Array[Float])]], dims: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus0.sparkSession)
     widen(corpus0).select(col(idCol) +: pqCodeCols(vecCol, cbs, dims): _*)
   }
 
@@ -351,7 +346,6 @@ object Similarity {
                    cbs: Seq[Seq[(Long, Array[Float])]], dims: Int): DataFrame = {
     val m = cbs.length
     val sub = dims / m
-    graft.plans.GraftFunctions.register(corpus0.sparkSession)
     val rec = pqRecon(col(vecCol), cbs, sub)
     val sses = (0 until m).map { s =>
       val sv = slice(col(vecCol), lit(s * sub + 1), lit(sub))
@@ -417,7 +411,6 @@ object Similarity {
                          idCol: String, vecCol: String, k: Int,
                          nprobe: Int, cents: Seq[(Long, Array[Float])],
                          cbs: Seq[Seq[(Long, Array[Float])]]): DataFrame = {
-    val spark = corpus0.sparkSession
     val corpus = widen(corpus0)
     val dims = cbs.map(_.head._2.length).sum
     val sub = dims / cbs.length
@@ -426,7 +419,7 @@ object Similarity {
     // Coarse assignment is the in-row literal-model argmax (zero shuffle).
     val assign = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
       .select(col("nid"),
-        Vectors.nearestCidExpr(spark, col("nv"), cents).as("n_cid"),
+        Vectors.nearestCidExpr(col("nv"), cents).as("n_cid"),
         pqRecon(col("nv"), cbs, sub).as("rv"))
     ivfPqServe(assign, queries, idCol, vecCol, k, nprobe, cents)
   }
@@ -441,10 +434,9 @@ object Similarity {
   private def ivfPqServe(assign: DataFrame, queries: DataFrame,
                          idCol: String, vecCol: String, k: Int, nprobe: Int,
                          cents: Seq[(Long, Array[Float])]): DataFrame = {
-    val spark = queries.sparkSession
     val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("cid",
-        explode_outer(Vectors.nearestCidsExpr(spark, col("qv"), cents, nprobe)))
+        explode_outer(Vectors.nearestCidsExpr(col("qv"), cents, nprobe)))
       .filter(col("cid").isNotNull) // outer+filter: see SafeExplode
     val scored = broadcast(probes).join(assign, col("cid") === col("n_cid") &&
         col("qid") =!= col("nid"))
@@ -470,10 +462,8 @@ object Similarity {
                n1: Int, n2: Int,
                cents1: Seq[(Long, Array[Float])],
                cbs: Map[Long, Seq[(Long, Array[Float])]]): DataFrame = {
-    val spark = corpus0.sparkSession
     val corpus = widen(corpus0)
-    val (gExpr, subOf) = Vectors.twoLevelAssignExprs(
-      spark, col("nv"), cents1, cbs)
+    val (gExpr, subOf) = Vectors.twoLevelAssignExprs(col("nv"), cents1, cbs)
     val assign = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
       .withColumn("g", gExpr)
       .withColumn("sub", subOf(col("g")))
@@ -484,10 +474,10 @@ object Similarity {
     // analysis (a null scalar for an unmodeled cell becomes array(null),
     // whose exploded null row the isNotNull filter drops — the same
     // semantics as a null probe array)
-    val subProbe = Vectors.perCellArgmax(spark, col("qv"), col("g"), cbs, n2)
+    val subProbe = Vectors.perCellArgmax(col("qv"), col("g"), cbs, n2)
     val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("g",
-        explode_outer(Vectors.nearestCidsExpr(spark, col("qv"), cents1, n1)))
+        explode_outer(Vectors.nearestCidsExpr(col("qv"), cents1, n1)))
       .filter(col("g").isNotNull) // outer+filter: see SafeExplode
       .withColumn("sub", explode_outer(
         if (n2 == 1) array(subProbe) else subProbe))
@@ -513,11 +503,9 @@ object Similarity {
   def pqIndex(corpus0: DataFrame, idCol: String, vecCol: String,
               cents: Seq[(Long, Array[Float])],
               cbs: Seq[Seq[(Long, Array[Float])]], dims: Int): DataFrame = {
-    val spark = corpus0.sparkSession
     require(cents.nonEmpty, "pqIndex needs a non-empty coarse model")
-    graft.plans.GraftFunctions.register(spark)
     widen(corpus0).select(
-      col(idCol) +: Vectors.nearestCidExpr(spark, col(vecCol), cents).as("cid")
+      col(idCol) +: Vectors.nearestCidExpr(col(vecCol), cents).as("cid")
         +: pqCodeCols(vecCol, cbs, dims): _*)
   }
 
@@ -604,7 +592,7 @@ object Similarity {
     // to amortize its per-id ranking Exchange.)
     val cvMap = typedLit(cents.map { case (cid, cv) => (cid, cv.toSeq) }.toMap)
     val assigned = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-      .withColumn("n_cid", Vectors.nearestCidExpr(spark, col("nv"), cents))
+      .withColumn("n_cid", Vectors.nearestCidExpr(col("nv"), cents))
       .withColumn("cv", element_at(cvMap, col("n_cid")))
       .select(col("nid"), col("n_cid"), col("nv"), col("cv"),
         zip_with(col("nv"), col("cv"), (x, y) => (x - y).cast("float")).as("rv"))
@@ -617,7 +605,7 @@ object Similarity {
         (x, y) => (x + y).cast("float")).as("recon"))
     val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("cid",
-        explode_outer(Vectors.nearestCidsExpr(spark, col("qv"), cents, nprobe)))
+        explode_outer(Vectors.nearestCidsExpr(col("qv"), cents, nprobe)))
       .filter(col("cid").isNotNull) // outer+filter: see SafeExplode
     val scored = broadcast(probes).join(cand, col("cid") === col("n_cid") &&
         col("qid") =!= col("nid"))
@@ -648,7 +636,6 @@ object Similarity {
                  k: Int = 5, wVec: Double = 0.6, wLex: Double = 0.4,
                  shingleK: Int = 3): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val df = Dedup.widen(corpus)
     // 8-byte hashed shingles through the index and intersect, as in
     // Dedup.ngramJaccard (see Dedup.shingleHash for the collision math).
@@ -670,9 +657,9 @@ object Similarity {
       .join(docSh.select(col(idCol).as("nid"), col("sh").as("shn"),
         col("vec").as("nv")), "nid")
       .select(col("qid"), col("nid"),
-        (lit(wVec) * Vectors.cosineNative(corpus.sparkSession, col("qv"), col("nv")) +
-          lit(wLex) * (call_function("graft_sorted_intersect_count",
-            col("shq"), col("shn")).cast("double") / col("nq"))).as("score"))
+        (lit(wVec) * Vectors.cosineNative(col("qv"), col("nv")) +
+          lit(wLex) * (GraftFunctions.sortedIntersectCount(col("shq"), col("shn"))
+            .cast("double") / col("nq"))).as("score"))
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -695,7 +682,6 @@ object Similarity {
               idCol: String, textCol: String, vecCol: String,
               k: Int = 5, poolK: Int = 20, k0: Int = 60,
               shingleK: Int = 3): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val df = Dedup.widen(corpus)
     val docSh = Dedup.hashedShingleSets(df, idCol, textCol, shingleK,
       keep = Seq(col(vecCol).as("vec"), queryPred.as("is_query")))
@@ -713,10 +699,10 @@ object Similarity {
       .join(docSh.select(col(idCol).as("nid"), col("sh").as("shn"),
         col("vec").as("nv")), "nid")
       .select(col("qid"), col("nid"),
-        Vectors.cosineNative(corpus.sparkSession, col("qv"), col("nv"))
+        Vectors.cosineNative(col("qv"), col("nv"))
           .as("dcos"),
-        (call_function("graft_sorted_intersect_count",
-          col("shq"), col("shn")).cast("double") / col("nq")).as("lex"))
+        (GraftFunctions.sortedIntersectCount(col("shq"), col("shn"))
+          .cast("double") / col("nq")).as("lex"))
     val wd = Window.partitionBy("qid").orderBy(col("dcos").desc, col("nid").asc)
     val wl = Window.partitionBy("qid").orderBy(col("lex").desc, col("nid").asc)
     val fused = scored
@@ -805,8 +791,7 @@ object Similarity {
         col("bucket").as("qbucket"))
     val scored = cb.join(qb, col("qbucket") === col("bucket") && col("qid") =!= col(idCol))
       .select(col("qid"), col(idCol).as("nid"),
-        Vectors.cosineNative(corpus.sparkSession,
-          col("qv"), col(vecCol)).as("cos"))
+        Vectors.cosineNative(col("qv"), col(vecCol)).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -836,8 +821,7 @@ object Similarity {
         explode(probeSet).as("qbucket"))
     val scored = cb.join(qb, col("qbucket") === col("bucket") && col("qid") =!= col(idCol))
       .select(col("qid"), col(idCol).as("nid"),
-        Vectors.cosineNative(corpus.sparkSession,
-          col("qv"), col(vecCol)).as("cos"))
+        Vectors.cosineNative(col("qv"), col(vecCol)).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -947,11 +931,11 @@ object Similarity {
       .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
     require(cents.nonEmpty, "ivfSqTopK needs a non-empty centroid model")
     val assign = corpus.select(col(idCol).as("nid"),
-        Vectors.nearestCidExpr(spark, col(vecCol), cents).as("n_cid"),
+        Vectors.nearestCidExpr(col(vecCol), cents).as("n_cid"),
         sqReconExpr(sqCodeExpr(col(vecCol), model), model).as("rv"))
     val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("cid",
-        explode_outer(Vectors.nearestCidsExpr(spark, col("qv"), cents, nprobe)))
+        explode_outer(Vectors.nearestCidsExpr(col("qv"), cents, nprobe)))
       .filter(col("cid").isNotNull) // outer+filter: see SafeExplode
     val scored = broadcast(probes).join(assign, col("cid") === col("n_cid") &&
         col("qid") =!= col("nid"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 
 /** Deterministic cardinality sketches for corpus statistics.
   *
@@ -40,7 +41,6 @@ object Sketches {
     * the dedup groupBy dominates either way. */
   def kmvDistinct(df: DataFrame, strataCol: String, valueCol: String,
                   k: Int = 64): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val dv = df.select(col(strataCol), col(valueCol).as("v")).distinct()
       .withColumn("u", Sampling.hashUnit(col("v")))
     val w = Window.partitionBy(strataCol).orderBy(col("u"), col("v"))
@@ -71,9 +71,8 @@ object Sketches {
     * arithmetic is non-negative bigint mod — identical in any engine. */
   private def bloomPositions(key: Column, mBits: Int, k: Int): Column =
     // native double-hash kernel — bit-identical to the md5/conv/transform
-    // column form (see graft.plans.KmPositions for the replaced shape);
-    // caller operators register GraftFunctions via TableCatalog.load
-    call_function("graft_km_positions", key.cast("string"), lit(mBits), lit(k))
+    // column form (see graft.plans.KmPositions for the replaced shape)
+    GraftFunctions.kmPositions(key.cast("string"), mBits, k)
 
   /** Bloom filter over the distinct values of `keyCol`, as a SPARSE
     * bitmap frame (word_idx, bits): 32 bits per word, stored in a
@@ -93,7 +92,6 @@ object Sketches {
     * capped at 2^30 and numHashes at 64, far past any useful point. */
   def bloomBuild(df: DataFrame, keyCol: String, mBits: Int,
                  numHashes: Int = 5): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(mBits >= 32 && mBits % 32 == 0 && mBits <= (1 << 30),
       s"mBits must be a multiple of 32 in [32, 2^30], got $mBits")
     require(numHashes >= 1 && numHashes <= 64,
@@ -121,7 +119,6 @@ object Sketches {
   def bloomProbe(df: DataFrame, keyCol: String, words: Array[Long],
                  mBits: Int, numHashes: Int = 5,
                  maybeCol: String = "maybe_present"): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(words.length == mBits / 32,
       s"dense bloom must have mBits/32 = ${mBits / 32} words, got ${words.length}")
     val wordsLit = typedLit(words)
@@ -160,7 +157,6 @@ object Sketches {
   def quantileSample(df: DataFrame, strataCol: String, valueCol: String,
                      idCol: String, k: Int = 64,
                      quantiles: Seq[Double] = Seq(0.5, 0.9)): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(k >= 1, s"sample size must be positive, got $k")
     require(quantiles.nonEmpty && quantiles.forall(q => q > 0 && q < 1),
       s"quantiles must be in (0,1), got $quantiles")
@@ -203,13 +199,12 @@ object Sketches {
     * map-side combined. */
   def hllRegisters(df: DataFrame, strataCol: String, valueCol: String,
                    p: Int = 6): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(p >= 4 && p <= 14, s"p must be in [4, 14], got $p")
     val m = 1 << p
     val maxRho = 60 - p + 1
     val dv = df.select(col(strataCol), col(valueCol).cast("string").as("v"))
       .distinct()
-    val h = call_function("graft_md5_prefix_long", col("v"), lit(15))
+    val h = GraftFunctions.md5PrefixLong(col("v"), 15)
     // shiftright/bitwiseAND, NOT `/` — Column `/` is DOUBLE division and
     // a 60-bit hash does not survive the 53-bit mantissa round-trip
     dv.select(col(strataCol),
@@ -280,7 +275,7 @@ object Sketches {
   private[graft] def cmsPositions(key: Column, width: Int, depth: Int): Column =
     // native double-hash kernel (graft.plans.KmPositions) — one digest
     // pass, no hex/conv string churn, per occurrence row of the build
-    call_function("graft_km_positions", key.cast("string"), lit(width), lit(depth))
+    GraftFunctions.kmPositions(key.cast("string"), width, depth)
 
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) over the occurrence
     * stream of `keyCol`, as a SPARSE (row_idx, bucket, cnt) frame —
@@ -294,7 +289,6 @@ object Sketches {
     * reproduces it bit-for-bit). */
   def cmsBuild(df: DataFrame, keyCol: String, width: Int = 1 << 12,
                depth: Int = 4): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     require(width >= 2 && width <= (1 << 24), s"width out of range: $width")
     require(depth >= 1 && depth <= 16, s"depth out of range: $depth")
     // Count occurrences per DISTINCT key first, then hash each distinct
@@ -429,7 +423,6 @@ object Sketches {
   def cmsEstimate(df: DataFrame, keyCol: String, sketch: DataFrame,
                   width: Int = 1 << 12, depth: Int = 4,
                   estCol: String = "cms_count"): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val probes = graft.functions.SafeExplode.posexplodeSelect(
         df, Seq(col(keyCol)), cmsPositions(col(keyCol), width, depth))
       .select(col(keyCol), col("pos").as("row_idx"), col("col").as("bucket"))

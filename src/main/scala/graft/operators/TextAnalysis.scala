@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 import graft.functions.TextFunctions._
 
 /** Per-document text analysis for training-data curation: language ID,
@@ -279,12 +280,11 @@ object TextAnalysis {
     * accumulates in decimal. Output: one row (n_p, n_q, jsd). */
   def jsdDrift(df: DataFrame, textCol: String, pred: Column): DataFrame = {
     val spark = df.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val toks = graft.functions.SafeExplode.explodeSelect(
       df, Seq(pred.as("is_p")), tokens(col(textCol)), "w")
     val counts = toks
       .select(col("is_p"),
-        (call_function("graft_md5_prefix_long", col("w"), lit(2)) % 256)
+        (GraftFunctions.md5PrefixLong(col("w"), 2) % 256)
           .as("b"))
       .groupBy("b").agg(
         sum(when(col("is_p"), 1L).otherwise(0L)).as("cp"),
@@ -658,7 +658,6 @@ object TextAnalysis {
     * Output: (idCol, n_words, n_bpe_tokens). */
   def bpeEncode(df0: DataFrame, idCol: String, textCol: String,
                 merges: Seq[(String, String)]): DataFrame = {
-    graft.plans.GraftFunctions.register(df0.sparkSession)
     // the merge table rides the plan as two foldable array literals
     // (training order) — model-sized, evaluated once, codegen'd into a
     // single per-word loop
@@ -672,7 +671,7 @@ object TextAnalysis {
         // transform+aggregate wrapper was interpreted HOF dispatch per
         // word plus an intermediate long array, around an already-native
         // per-word kernel (guide §4)
-        call_function("graft_bpe_token_sum", col("toks"), lhsLit, rhsLit)
+        GraftFunctions.bpeTokenSum(col("toks"), lhsLit, rhsLit)
           .as("n_bpe_tokens"))
   }
 
@@ -769,11 +768,10 @@ object TextAnalysis {
     // digest pass + an O(m) monotonic-deque sliding min, instead of the
     // per-position slice + array_min over a materialized hex array
     // (bit-identical; see the kernel scaladoc for the equivalence)
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= k)
       .withColumn("fps",
-        call_function("graft_winnow_fps", col("toks"), lit(k), lit(window)))
+        GraftFunctions.winnowFingerprints(col("toks"), k, window))
   }
 
   /** Unigram-LM surprise (perplexity proxy): the corpus's own token
@@ -1109,7 +1107,6 @@ object TextAnalysis {
     *
     * Output: (idCol, n_chars, entropy), NULL entropy for empty docs. */
   def charEntropy(df0: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df0.sparkSession)
     val df = Dedup.widen(df0)
     // The aggregation is DOC-LOCAL: the old form exploded every character
     // of every document and shuffled them twice (groupBy (id, ch), then
@@ -1120,7 +1117,7 @@ object TextAnalysis {
     // log(0) = null → entropy null, matching the left-join-miss rows).
     df.select(col(idCol), lower(col(textCol)).as("txt"))
       .select(col(idCol),
-        call_function("graft_char_entropy_parts", col("txt")).as("p"))
+        GraftFunctions.charEntropyParts(col("txt")).as("p"))
       .select(col(idCol),
         col("p.n").as("n_chars"),
         round(log(when(col("p.n") > 0, col("p.n")).cast("double"))

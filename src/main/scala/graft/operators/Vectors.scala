@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 
 /** Dense-vector math over `array<float>` columns as pure Catalyst
   * expressions (`zip_with` + sequential `aggregate` fold — deterministic
@@ -38,13 +39,8 @@ object Vectors {
   }
 
   /** Native fused variant (graft.plans.CosineSimilarity — one codegen'd
-    * loop, no intermediate array). Bit-identical to [[cosine]]; requires
-    * registration, which is idempotent and done here. */
-  def cosineNative(spark: org.apache.spark.sql.SparkSession,
-                   a: Column, b: Column): Column = {
-    graft.plans.GraftFunctions.register(spark)
-    round(call_function("graft_cosine", a, b), 6)
-  }
+    * loop, no intermediate array). Bit-identical to [[cosine]]. */
+  def cosineNative(a: Column, b: Column): Column = round(GraftFunctions.cosine(a, b), 6)
 
   /** Centroid model as ONE plan literal: `array<struct<_1: cid, _2: cv>>`,
     * sorted by cid for a deterministic literal. One literal + higher-order
@@ -63,23 +59,16 @@ object Vectors {
     * — transform + graft_cosine + array_max over the literal — computed
     * the same values but paid a fresh multi-second Janino compile per
     * query; the kernel is one compiled loop, constant compile cost.) */
-  private[graft] def nearestCidExpr(spark: org.apache.spark.sql.SparkSession,
-                                    v: Column, cents: Seq[(Long, Array[Float])]): Column = {
-    graft.plans.GraftFunctions.register(spark)
-    element_at(
-      call_function("graft_nearest_centroids", v, centroidsLit(cents), lit(1)), 1)
-  }
+  private[graft] def nearestCidExpr(v: Column, cents: Seq[(Long, Array[Float])]): Column =
+    element_at(GraftFunctions.nearestCentroids(v, centroidsLit(cents), 1), 1)
 
   /** Top-`n` nearest-centroid ids of `v`, ordered (cosine desc, cid asc),
     * as a pure in-row expression (same native kernel). The row fan-out
     * downstream is the caller's explode — n rows per query, never k per
     * corpus row. */
-  private[graft] def nearestCidsExpr(spark: org.apache.spark.sql.SparkSession,
-                                     v: Column, cents: Seq[(Long, Array[Float])],
-                                     n: Int): Column = {
-    graft.plans.GraftFunctions.register(spark)
-    call_function("graft_nearest_centroids", v, centroidsLit(cents), lit(n))
-  }
+  private[graft] def nearestCidsExpr(v: Column, cents: Seq[(Long, Array[Float])],
+                                     n: Int): Column =
+    GraftFunctions.nearestCentroids(v, centroidsLit(cents), n)
 
   /** Deterministic distributed k-means training (cosine metric) — the
     * trained coarse quantizer for
@@ -114,7 +103,6 @@ object Vectors {
     require(iters >= 1, s"kmeansTrain needs iters >= 1, got $iters")
     val spark = df.sparkSession
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val base = df.select(col(idCol), col(vecCol).as("v"))
     var cents: Seq[(Long, Array[Float])] = base
       .orderBy(col(idCol).asc).limit(k)
@@ -125,7 +113,7 @@ object Vectors {
     // same projection — no join back to recover the vectors.
     for (_ <- 1 until iters) {
       val assign = base.select(
-        nearestCidExpr(spark, col("v"), cents).as("cluster_id"), col("v"))
+        nearestCidExpr(col("v"), cents).as("cluster_id"), col("v"))
       val means = assign
         .select(col("cluster_id"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("cluster_id"), col("dim"))
@@ -156,7 +144,7 @@ object Vectors {
     if (cents.isEmpty)
       df.select(col(idCol), lit(null).cast("long").as("cluster_id")).limit(0)
     else df.select(col(idCol),
-      nearestCidExpr(df.sparkSession, col(vecCol), cents).as("cluster_id"))
+      nearestCidExpr(col(vecCol), cents).as("cluster_id"))
   }
 
   /** Train + final assignment: (id, cluster_id) after `iters` rounds —
@@ -194,7 +182,7 @@ object Vectors {
     import spark.implicits._
     val cents1 = kmeansTrain(df, idCol, vecCol, k1, iters)
     val assigned = df.select(col(idCol).as("__id"), col(vecCol).as("v"))
-      .withColumn("g", nearestCidExpr(spark, col("v"), cents1))
+      .withColumn("g", nearestCidExpr(col("v"), cents1))
     // per-cell seeds: the k2 lowest ids in each cell (model-budget
     // collect: at most k1·k2 rows)
     val seeds = assigned.withColumn("rn",
@@ -211,7 +199,7 @@ object Vectors {
       "kmeansTwoLevel needs a non-empty corpus (no level-1 cells trained)")
     for (_ <- 1 until iters) {
       val means = assigned.withColumn("sub",
-          perCellArgmax(spark, col("v"), col("g"), cbs, 1))
+          perCellArgmax(col("v"), col("g"), cbs, 1))
         .select(col("g"), col("sub"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("g", "sub", "dim")
         .agg((sum(col("x").cast("double").cast("decimal(30,15)")).cast("double")
@@ -240,13 +228,12 @@ object Vectors {
     * top-n array (probe form). Loud on an empty model — a when-chain
     * over zero cells has no meaningful value. */
   private[operators] def perCellArgmax(
-      spark: org.apache.spark.sql.SparkSession, v: Column, gCol: Column,
-      cbs: Map[Long, Seq[(Long, Array[Float])]], n: Int): Column = {
+      v: Column, gCol: Column, cbs: Map[Long, Seq[(Long, Array[Float])]], n: Int): Column = {
     require(cbs.nonEmpty, "perCellArgmax needs a non-empty per-cell model")
     val cells = cbs.toSeq.sortBy(_._1)
     def of(cb: Seq[(Long, Array[Float])]): Column =
-      if (n == 1) nearestCidExpr(spark, v, cb)
-      else nearestCidsExpr(spark, v, cb, n)
+      if (n == 1) nearestCidExpr(v, cb)
+      else nearestCidsExpr(v, cb, n)
     cells.tail.foldLeft(when(gCol === cells.head._1, of(cells.head._2))) {
       case (acc, (cid, cb)) => acc.when(gCol === cid, of(cb))
     }
@@ -255,14 +242,13 @@ object Vectors {
   /** Per-row (cell, subcell) assignment under a trained two-level model:
     * level-1 argmax, then the argmax against THAT cell's level-2
     * codebook ([[perCellArgmax]]). Pure projection, zero shuffles. */
-  def twoLevelAssignExprs(spark: org.apache.spark.sql.SparkSession,
-                          v: Column, cents1: Seq[(Long, Array[Float])],
+  def twoLevelAssignExprs(v: Column, cents1: Seq[(Long, Array[Float])],
                           cbs: Map[Long, Seq[(Long, Array[Float])]])
       : (Column, Column => Column) = {
     require(cents1.nonEmpty && cbs.nonEmpty,
       "twoLevelAssignExprs needs a non-empty two-level model")
-    val g = nearestCidExpr(spark, v, cents1)
-    (g, gCol => perCellArgmax(spark, v, gCol, cbs, 1))
+    val g = nearestCidExpr(v, cents1)
+    (g, gCol => perCellArgmax(v, gCol, cbs, 1))
   }
 
   /** Top principal direction of the (uncentered) embedding Gram matrix

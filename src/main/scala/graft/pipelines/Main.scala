@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.catalog.TableCatalog
 
 /** CLI entry point — the Spark equivalent of the reference's template
@@ -113,14 +114,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val (template, o) = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(o.getOrElse("master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val b = GraftSession.builder().config("spark.log.level", "WARN")
+    val spark = o.get("master").fold(b)(b.master).getOrCreate()
     try run(spark, template, o) finally spark.stop()
   }
 }

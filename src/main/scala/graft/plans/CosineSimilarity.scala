@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression for cosine similarity over two
   * `array<float>` columns, with whole-stage codegen (`doGenCode`).
@@ -91,93 +89,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     })
 
   override def prettyName: String = "graft_cosine"
-}
-
-/** Session registration for graft's native expressions — either through
-  * [[GraftExtensions]] (`spark.sql.extensions=graft.plans.GraftExtensions`)
-  * or imperatively via [[GraftFunctions.register]] (idempotent; operators
-  * call it before using `graft_cosine`). */
-object GraftFunctions {
-  val cosineInfo = new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine")
-  val intersectInfo = new ExpressionInfo(
-    classOf[SortedIntersectCount].getName, "graft_sorted_intersect_count")
-  val hyperplaneInfo = new ExpressionInfo(
-    classOf[HyperplaneBuckets].getName, "graft_hyperplane_bucket")
-  val gramSharesInfo = new ExpressionInfo(
-    classOf[GramBucketShares].getName, "graft_gram_bucket_shares")
-  val nearestCentroidsInfo = new ExpressionInfo(
-    classOf[NearestCentroids].getName, "graft_nearest_centroids")
-  val nearestCentroidsZsInfo = new ExpressionInfo(
-    classOf[NearestCentroids].getName, "graft_nearest_centroids_zs")
-  val hilbertInfo = new ExpressionInfo(classOf[HilbertKey].getName, "graft_hilbert_key")
-  val jaroWinklerInfo = new ExpressionInfo(
-    classOf[JaroWinklerSimilarity].getName, "graft_jaro_winkler")
-  val bpeTokenCountInfo = new ExpressionInfo(
-    classOf[BpeTokenCount].getName, "graft_bpe_token_count")
-  val minhashSignatureInfo = new ExpressionInfo(
-    classOf[MinhashSignature].getName, "graft_minhash_signature")
-  val simhashInfo = new ExpressionInfo(
-    classOf[SimhashFingerprint].getName, "graft_simhash")
-  val shingleHashSetInfo = new ExpressionInfo(
-    classOf[ShingleHashSet].getName, "graft_shingle_hash_set")
-  val winnowFpsInfo = new ExpressionInfo(
-    classOf[WinnowFingerprints].getName, "graft_winnow_fps")
-  val md5PrefixLongInfo = new ExpressionInfo(
-    classOf[Md5PrefixLong].getName, "graft_md5_prefix_long")
-  val kmPositionsInfo = new ExpressionInfo(
-    classOf[KmPositions].getName, "graft_km_positions")
-  val charEntropyPartsInfo = new ExpressionInfo(
-    classOf[CharEntropyParts].getName, "graft_char_entropy_parts")
-  val bpeTokenSumInfo = new ExpressionInfo(
-    classOf[BpeTokenSum].getName, "graft_bpe_token_sum")
-
-  private val builders: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_cosine"), cosineInfo,
-      (c: Seq[Expression]) => CosineSimilarity(c.head, c(1))),
-    (FunctionIdentifier("graft_sorted_intersect_count"), intersectInfo,
-      (c: Seq[Expression]) => SortedIntersectCount(c.head, c(1))),
-    (FunctionIdentifier("graft_hyperplane_bucket"), hyperplaneInfo,
-      (c: Seq[Expression]) => HyperplaneBuckets(c.head, c(1))),
-    (FunctionIdentifier("graft_gram_bucket_shares"), gramSharesInfo,
-      (c: Seq[Expression]) => GramBucketShares(c.head, c(1), c(2))),
-    (FunctionIdentifier("graft_nearest_centroids"), nearestCentroidsInfo,
-      (c: Seq[Expression]) => NearestCentroids(c.head, c(1), c(2))),
-    (FunctionIdentifier("graft_nearest_centroids_zs"), nearestCentroidsZsInfo,
-      (c: Seq[Expression]) => NearestCentroids(c.head, c(1), c(2), zeroSafe = true)),
-    (FunctionIdentifier("graft_hilbert_key"), hilbertInfo,
-      (c: Seq[Expression]) => HilbertKey(c.head, c(1), c(2))),
-    (FunctionIdentifier("graft_jaro_winkler"), jaroWinklerInfo,
-      (c: Seq[Expression]) => JaroWinklerSimilarity(c.head, c(1))),
-    (FunctionIdentifier("graft_bpe_token_count"), bpeTokenCountInfo,
-      (c: Seq[Expression]) => BpeTokenCount(c.head, c(1), c(2))),
-    (FunctionIdentifier("graft_minhash_signature"), minhashSignatureInfo,
-      (c: Seq[Expression]) => MinhashSignature(c.head, c(1))),
-    (FunctionIdentifier("graft_simhash"), simhashInfo,
-      (c: Seq[Expression]) => SimhashFingerprint(c.head, c(1))),
-    (FunctionIdentifier("graft_shingle_hash_set"), shingleHashSetInfo,
-      (c: Seq[Expression]) => ShingleHashSet(c.head, c(1))),
-    (FunctionIdentifier("graft_winnow_fps"), winnowFpsInfo,
-      (c: Seq[Expression]) => WinnowFingerprints(c.head, c(1), c(2))),
-    (FunctionIdentifier("graft_md5_prefix_long"), md5PrefixLongInfo,
-      (c: Seq[Expression]) => Md5PrefixLong(c.head, c(1))),
-    (FunctionIdentifier("graft_km_positions"), kmPositionsInfo,
-      (c: Seq[Expression]) => KmPositions(c.head, c(1), c(2))),
-    (FunctionIdentifier("graft_char_entropy_parts"), charEntropyPartsInfo,
-      (c: Seq[Expression]) => CharEntropyParts(c.head)),
-    (FunctionIdentifier("graft_bpe_token_sum"), bpeTokenSumInfo,
-      (c: Seq[Expression]) => BpeTokenSum(c.head, c(1), c(2))))
-
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (id, info, b) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, b)
-    }
-
-  private[plans] def all = builders
-}
-
-/** `SparkSessionExtensions` hook: inject the native functions at session
-  * build time (`--conf spark.sql.extensions=graft.plans.GraftExtensions`). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    GraftFunctions.all.foreach(ext.injectFunction)
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 import graft.catalog.TableCatalog
 
 /** Round-9 analytics tier: interval algebra, distribution tests, corpus
@@ -593,7 +594,6 @@ object AnalyticsQueries {
     //     alone. ---
     "d_er_pipeline" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val cust = t(s, dir, "customer").filter(col("c_custkey") < 300)
       val c = cust.select(col("c_custkey").as("id"), col("c_name").as("nm"))
       val fz = graft.operators.Dedup.fuzzyPairs(cust, "c_custkey", "c_name")
@@ -606,7 +606,7 @@ object AnalyticsQueries {
       val jw = a.join(
           r.select(col("id").as("id2"), col("nm").as("n2"), col("rn").as("rn2")),
           "rn2")
-        .filter(round(call_function("graft_jaro_winkler", col("n1"), col("n2")), 6)
+        .filter(round(GraftFunctions.jaroWinkler(col("n1"), col("n2")), 6)
           >= 0.93)
         .select(col("id1"), col("id2"))
       val pairs = fz.unionByName(jw)
@@ -815,7 +815,7 @@ object AnalyticsQueries {
         .select(col("vec_id").as("yid"), col("embedding").as("yv"))
       val pairs = y.join(broadcast(x), col("xid") =!= col("yid"))
         .select(col("xid"), col("yid"),
-          Vectors.cosineNative(s, col("xv"), col("yv")).as("cos"))
+          Vectors.cosineNative(col("xv"), col("yv")).as("cos"))
       val wx = Window.partitionBy("xid").orderBy(col("cos").desc, col("yid"))
       val wy = Window.partitionBy("yid").orderBy(col("cos").desc, col("xid"))
       val ranked = pairs
@@ -920,7 +920,6 @@ object AnalyticsQueries {
     //     `window` rows replicated to the next partition. ---
     "d_jaro_linkage" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val c = t(s, dir, "customer").filter(col("c_custkey") < 500)
         .select(col("c_custkey").as("id"), col("c_name").as("nm"))
       val r = c.withColumn("rn",
@@ -932,7 +931,7 @@ object AnalyticsQueries {
         r.select(col("id").as("id2"), col("nm").as("n2"), col("rn").as("rn2")),
         "rn2")
       cand.select(col("id1"), col("id2"), col("n1"), col("n2"),
-          round(call_function("graft_jaro_winkler", col("n1"), col("n2")), 6)
+          round(GraftFunctions.jaroWinkler(col("n1"), col("n2")), 6)
             .as("jw"))
         .filter(col("jw") >= 0.88)
         .orderBy("id1", "id2")

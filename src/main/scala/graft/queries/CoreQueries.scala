@@ -417,9 +417,8 @@ object CoreQueries {
     // equal-width key ranges cover tighter boxes than Z's diagonal
     // jumps). Key = the native HilbertKey kernel (one generated loop).
     "q_hilbert_layout" -> ((s, dir) => {
-      val h = graft.functions.Layout.hilbertKey(s,
-        pmod(col("l_partkey"), lit(65536L)),
-        pmod(col("l_suppkey"), lit(65536L)), bits = 16)
+      val h = graft.functions.Layout.hilbertKey(
+        pmod(col("l_partkey"), lit(65536L)), pmod(col("l_suppkey"), lit(65536L)), bits = 16)
       t(s, dir, "lineitem")
         .select(h.as("hkey"), col("l_partkey"), col("l_suppkey"))
         .groupBy(shiftright(col("hkey"), 14).as("bucket"))

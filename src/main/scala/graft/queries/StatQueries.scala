@@ -580,16 +580,16 @@ object StatQueries {
         .kmeansTrain(e, "vec_id", "embedding", k = 4, iters = 2)
       val assign = e.select(col("vec_id").as("nid"), col("embedding").as("nv"))
         .withColumn("n_cid",
-          graft.operators.Vectors.nearestCidExpr(spark, col("nv"), cents))
+          graft.operators.Vectors.nearestCidExpr(col("nv"), cents))
       val probes = q.select(col("vec_id").as("qid"), col("embedding").as("qv"))
         .select(col("qid"), col("qv"), posexplode(
-          graft.operators.Vectors.nearestCidsExpr(spark, col("qv"), cents, 4))
+          graft.operators.Vectors.nearestCidsExpr(col("qv"), cents, 4))
           .as(Seq("p0", "cid")))
         .withColumn("crk", col("p0") + 1)
       val cand = broadcast(probes)
         .join(assign, col("cid") === col("n_cid") && col("qid") =!= col("nid"))
         .select(col("qid"), col("nid"), col("crk"),
-          graft.operators.Vectors.cosineNative(spark, col("qv"), col("nv")).as("cos"))
+          graft.operators.Vectors.cosineNative(col("qv"), col("nv")).as("cos"))
         .groupBy("qid", "nid")
         .agg(min(col("crk")).as("mincrk"), max(col("cos")).as("cos"))
       val nps = Seq(1, 2, 4).toDF("nprobe")
@@ -1132,7 +1132,7 @@ object StatQueries {
           col("label").as("nlabel")), col("qid") =!= col("nid"))
         .select(col("qid"), col("nid"),
           (col("nlabel") === col("qlabel")).as("label_match"),
-          graft.operators.Vectors.cosineNative(s, col("qv"), col("nv")).as("cos"))
+          graft.operators.Vectors.cosineNative(col("qv"), col("nv")).as("cos"))
       val pre = scored.filter(col("label_match"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))))

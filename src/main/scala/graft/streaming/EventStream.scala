@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming surface. The reference is batch-only (SURVEY
@@ -75,7 +76,6 @@ object EventStream {
                        width: Int = 1024, depth: Int = 4,
                        windowLen: String = "1 day",
                        watermark: String = "1 hour"): DataFrame = {
-    graft.plans.GraftFunctions.register(events.sparkSession)
     graft.functions.SafeExplode.posexplodeSelect(
         events.withWatermark("ts", watermark)
           .select(col("ts"),
@@ -111,9 +111,7 @@ object EventStream {
                            watermark: String = "1 hour"): DataFrame = {
     val m = 1 << p
     val maxRho = 60 - p + 1
-    graft.plans.GraftFunctions.register(events.sparkSession)
-    val h = call_function("graft_md5_prefix_long",
-      col(keyCol).cast("string"), lit(15))
+    val h = GraftFunctions.md5PrefixLong(col(keyCol).cast("string"), 15)
     events.withWatermark("ts", watermark)
       .select(col("ts"),
         h.bitwiseAND(lit((m - 1).toLong)).as("j"),

@@ -63,7 +63,7 @@ class LayoutSpec extends SparkSpec {
       .toDF("x", "y")
     val clustered = Layout.hilbertCluster(df, col("x"), col("y"),
       bits = 6, numRanges = 8)
-    val key = Layout.hilbertKey(spark, col("x"), col("y"), bits = 6)
+    val key = Layout.hilbertKey(col("x"), col("y"), bits = 6)
     val ranges = clustered.select(spark_partition_id().as("p"), key.as("h"),
         col("x"), col("y"))
       .groupBy("p")
@@ -97,7 +97,7 @@ class LayoutSpec extends SparkSpec {
     // bits=1 U-walk: (0,0)=0, (0,1)=1, (1,1)=2, (1,0)=3
     val tiny = Seq((0, 0), (0, 1), (1, 1), (1, 0)).toDF("x", "y")
       .select(col("x"), col("y"),
-        Layout.hilbertKey(spark, col("x"), col("y"), bits = 1).as("d"))
+        Layout.hilbertKey(col("x"), col("y"), bits = 1).as("d"))
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
     assert(tiny == Map((0, 0) -> 0L, (0, 1) -> 1L, (1, 1) -> 2L, (1, 0) -> 3L))
     // 8x8 grid: keys are a permutation of 0..63, and sorting by key
@@ -105,7 +105,7 @@ class LayoutSpec extends SparkSpec {
     // (the locality property Z-order's diagonal jumps lack)
     val grid = (for { x <- 0 until 8; y <- 0 until 8 } yield (x, y)).toDF("x", "y")
       .select(col("x"), col("y"),
-        Layout.hilbertKey(spark, col("x"), col("y"), bits = 3).as("d"))
+        Layout.hilbertKey(col("x"), col("y"), bits = 3).as("d"))
       .collect().map(r => (r.getLong(2), (r.getInt(0), r.getInt(1))))
       .sortBy(_._1)
     assert(grid.map(_._1).toSeq == (0L until 64L).toSeq, "keys must be 0..63 exactly")

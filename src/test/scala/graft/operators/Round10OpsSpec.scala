@@ -39,7 +39,6 @@ class Round10OpsSpec extends SparkSpec {
   }
 
   test("graft_bpe_token_count matches the greedy sequential merge fold") {
-    graft.plans.GraftFunctions.register(spark)
     def count(w: String, merges: Seq[(String, String)]): Int = {
       val lhs = typedLit(merges.map(_._1))
       val rhs = typedLit(merges.map(_._2))

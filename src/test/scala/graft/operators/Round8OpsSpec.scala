@@ -92,7 +92,6 @@ class Round8OpsSpec extends SparkSpec {
     // the round-7 column form: transform over the centroid literal to
     // struct(round(graft_cosine, 6), -cid), array_max / sort_array desc
     // — rebuilt here verbatim as the parity reference
-    graft.plans.GraftFunctions.register(spark)
     val cents: Seq[(Long, Array[Float])] = (0L until 7L).map { c =>
       c -> Array.tabulate(16)(d =>
         (math.sin(c * 31 + d * 7) * (1 + (c % 3))).toFloat)
@@ -120,7 +119,6 @@ class Round8OpsSpec extends SparkSpec {
   }
 
   test("graft_nearest_centroids handles ties (lowest cid), zero-norm vectors, and n > k") {
-    graft.plans.GraftFunctions.register(spark)
     // duplicate centroids -> identical 6-dp scores -> lowest cid wins
     val cv = Array.tabulate(4)(_.toFloat + 1f).toSeq
     val dupLit = typedLit(Seq((5L, cv), (2L, cv), (9L, cv)))

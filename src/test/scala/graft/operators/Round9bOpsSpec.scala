@@ -78,7 +78,6 @@ class Round9bOpsSpec extends SparkSpec {
 
   test("graft_jaro_winkler runs inside codegen over a DataFrame") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val out = Seq(("martha", "marhta"), ("abc", "xyz"))
       .toDF("a", "b")
       .select(round(call_function("graft_jaro_winkler", col("a"), col("b")), 6).as("jw"))

@@ -27,8 +27,7 @@ class TwoLevelQuantizerSpec extends SparkSpec {
     val (cents1, cbs) = Vectors.kmeansTwoLevel(
       e, "vec_id", "embedding", k1 = 4, k2 = 4, iters = 2)
     def assignOf(df: org.apache.spark.sql.DataFrame) = {
-      val (g, subOf) = Vectors.twoLevelAssignExprs(
-        spark, col("embedding"), cents1, cbs)
+      val (g, subOf) = Vectors.twoLevelAssignExprs(col("embedding"), cents1, cbs)
       df.select(col("vec_id"), col("embedding"), g.as("g"))
         .withColumn("sub", subOf(col("g")))
         .select("vec_id", "g", "sub")

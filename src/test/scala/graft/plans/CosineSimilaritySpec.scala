@@ -14,10 +14,9 @@ class CosineSimilaritySpec extends SparkSpec {
   ).toDF("id", "a", "b")
 
   test("native expression is bit-identical to the HOF composition") {
-    GraftFunctions.register(spark)
     val r = vecs.select(
       Vectors.cosine(col("a"), col("b")).as("hof"),
-      Vectors.cosineNative(spark, col("a"), col("b")).as("native"))
+      Vectors.cosineNative(col("a"), col("b")).as("native"))
       .as[(Double, Double)].collect()
     r.foreach { case (h, n) =>
       assert(java.lang.Double.doubleToLongBits(h) ===
@@ -26,7 +25,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null array and null element both yield null") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Some(Seq(Some(1.0f), Some(2.0f))), Option.empty[Seq[Option[Float]]]),
       (Some(Seq(Some(1.0f), None)), Some(Seq(Some(1.0f), Some(2.0f)))))
@@ -37,7 +35,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("two cosine columns in one projection survive fused codegen (no name collision)") {
-    GraftFunctions.register(spark)
     // fallback=false turns a Janino compile failure (the bug: a fixed-name
     // local declared twice in the fused method) into a thrown error
     // instead of a silent interpreted fallback.
@@ -57,7 +54,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
     // force interpreted path by evaluating the expression directly
     val e = CosineSimilarity(
       org.apache.spark.sql.catalyst.expressions.Literal.create(

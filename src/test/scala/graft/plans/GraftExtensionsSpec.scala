@@ -1,48 +1,31 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkSpec
 
-/** Pins the `SparkSessionExtensions` injection path: a session built
-  * with [[GraftExtensions]] must resolve every native function WITHOUT
-  * any imperative GraftFunctions.register call — this is how a cluster
-  * deployment wires the kernels in. (The test goes through the public
-  * `Builder.withExtensions` hook, which applies the same object the
-  * `spark.sql.extensions=graft.plans.GraftExtensions` conf instantiates;
-  * the string conf itself is STATIC — it must be set when the
-  * SparkContext is created, so a suite sharing one context cannot
-  * exercise it directly.) */
+/** Pins SQL-name resolution of the native functions. `graft.GraftSession`
+  * sets `spark.sql.extensions=graft.plans.GraftExtensions`, so SQL text on
+  * its sessions resolves every `graft_*` name with no per-session call. The
+  * conf is static: it is read when the SparkContext starts, and every
+  * session on that context (including `newSession()`) gets the names.
+  * DataFrame code does not depend on this; it builds the expressions by
+  * type through [[GraftFunctions]] (see `FreshSessionSpec`). */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("session built with GraftExtensions resolves all native functions") {
-    spark // force the shared session (and its SparkContext) to exist first
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      // reuses the running SparkContext but builds a NEW session with the
-      // extensions applied at build time
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new GraftExtensions()(_))
-        .getOrCreate()
-      assert(s ne SparkSpec.session)
-      val cos = s.sql(
-        "SELECT graft_cosine(array(1.0f, 2.0f), array(2.0f, 1.0f))")
-        .head.getDouble(0)
-      assert(math.abs(cos - 0.8) < 1e-9)
-      val n = s.sql(
-        "SELECT graft_sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 9L))")
-        .head.getLong(0)
-      assert(n === 2L)
-      val b = s.sql(
-        "SELECT graft_hyperplane_bucket(array(1.0f, -1.0f, 0.5f), 8)")
-        .head.getLong(0)
-      assert(b >= 0L && b < 256L)
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    assert(spark.conf.get("spark.sql.extensions") === classOf[GraftExtensions].getName)
+    for (s <- Seq(spark, spark.newSession()); (id, _, _) <- GraftFunctions.all)
+      assert(s.catalog.functionExists(id.funcName), id.funcName)
+    val cos = spark.sql(
+      "SELECT graft_cosine(array(1.0f, 2.0f), array(2.0f, 1.0f))")
+      .head.getDouble(0)
+    assert(math.abs(cos - 0.8) < 1e-9)
+    val n = spark.sql(
+      "SELECT graft_sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 9L))")
+      .head.getLong(0)
+    assert(n === 2L)
+    val b = spark.sql(
+      "SELECT graft_hyperplane_bucket(array(1.0f, -1.0f, 0.5f), 8)")
+      .head.getLong(0)
+    assert(b >= 0L && b < 256L)
   }
 }

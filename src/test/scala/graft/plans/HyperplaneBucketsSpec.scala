@@ -28,7 +28,6 @@ class HyperplaneBucketsSpec extends SparkSpec {
   }
 
   test("native kernel equals the unrolled column form on every row") {
-    GraftFunctions.register(spark)
     val r = vecs.select(
       call_function("graft_hyperplane_bucket", col("v"), lit(8)).as("native"),
       unrolledBucket("v", 8, dims).as("unrolled"))
@@ -38,7 +37,6 @@ class HyperplaneBucketsSpec extends SparkSpec {
   }
 
   test("two bucket columns in one projection survive fused codegen") {
-    GraftFunctions.register(spark)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val r = vecs.select(
@@ -51,7 +49,6 @@ class HyperplaneBucketsSpec extends SparkSpec {
   }
 
   test("null array and null element yield null; interpreted matches codegen") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Option.empty[Seq[Option[Float]]]),
       (2L, Some(Seq(Some(1.0f), None, Some(2.0f)))))

@@ -26,7 +26,6 @@ class Md5KernelsSpec extends SparkSpec {
     conv(substring(md5(c), 1, n), 16, 10).cast("long")
 
   test("md5 prefix long matches conv(substring(md5)) for every n") {
-    GraftFunctions.register(spark)
     val df = strings.toDF("s")
     for (n <- Seq(1, 2, 6, 15)) {
       val r = df.select(
@@ -37,7 +36,6 @@ class Md5KernelsSpec extends SparkSpec {
   }
 
   test("md5 prefix long propagates null like md5/conv") {
-    GraftFunctions.register(spark)
     val df = Seq(Option.empty[String], Some("x")).toDF("s")
     val r = df.select(
       call_function("graft_md5_prefix_long", col("s"), lit(6)).as("fast"),
@@ -57,7 +55,6 @@ class Md5KernelsSpec extends SparkSpec {
   }
 
   test("km positions match the double-hash transform for every (width, k)") {
-    GraftFunctions.register(spark)
     val df = strings.toDF("s")
     for ((w, k) <- Seq((32, 5), (1024, 4), (8192, 4), (4096, 1), (1 << 30, 64), (3, 7))) {
       val r = df.select(
@@ -69,7 +66,6 @@ class Md5KernelsSpec extends SparkSpec {
   }
 
   test("km positions on a null key yield an array of k nulls, not null") {
-    GraftFunctions.register(spark)
     val df = Seq(Option.empty[String], Some("x")).toDF("s")
     val r = df.select(
       call_function("graft_km_positions", col("s"), lit(64), lit(5)).as("fast"),
@@ -102,7 +98,6 @@ class Md5KernelsSpec extends SparkSpec {
   }
 
   test("char entropy kernel reproduces the explode-aggregate form") {
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, Some("hello world")), (2L, Some("")), (3L, Some("aaaa")),
       (4L, Some("  \t\n ")), (5L, Some("ünïcøde 🙂 ünïcøde 🙂")),
@@ -123,7 +118,6 @@ class Md5KernelsSpec extends SparkSpec {
   }
 
   test("bpe token sum matches the aggregate-transform fold") {
-    GraftFunctions.register(spark)
     val lhs = typedLit(Seq("a", "ab", "l", "lo"))
     val rhs = typedLit(Seq("b", "c", "o", "w"))
     val docs = Seq(
@@ -148,7 +142,6 @@ class Md5KernelsSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen for all four kernels") {
-    GraftFunctions.register(spark)
     val df = strings.toDF("s")
     val toks = Seq(Seq("abc", "hello", "low")).toDF("toks")
     def all() = {

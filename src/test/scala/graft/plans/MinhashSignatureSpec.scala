@@ -29,7 +29,6 @@ class MinhashSignatureSpec extends SparkSpec {
   )
 
   test("native kernel is bit-identical to the HOF composition") {
-    GraftFunctions.register(spark)
     for (n <- Seq(1, 4, 16)) {
       val df = shapes.toDF("sh")
       val r = df.select(
@@ -41,7 +40,6 @@ class MinhashSignatureSpec extends SparkSpec {
   }
 
   test("null array yields null; null elements are skipped like array_min") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1, Option.empty[Seq[Option[String]]]),
       (2, Some(Seq(Option.empty[String], Some("x y z")))),
@@ -73,7 +71,6 @@ class MinhashSignatureSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
     val df = shapes.toDF("sh")
     val withCodegen = df.select(
       call_function("graft_minhash_signature", col("sh"), lit(16)).as("sig"))

@@ -36,11 +36,10 @@ class NativeKernelPropertySpec extends SparkSpec {
   } yield (a.distinct.sorted.toArray, b.distinct.sorted.toArray)
 
   test("graft_cosine equals the HOF composition on arbitrary vectors") {
-    GraftFunctions.register(spark)
     forAll(vecPairGen) { case (a, b) =>
       val r = Seq((a, b)).toDF("a", "b")
         .select(Vectors.cosine(col("a"), col("b")).as("hof"),
-          Vectors.cosineNative(spark, col("a"), col("b")).as("native"))
+          Vectors.cosineNative(col("a"), col("b")).as("native"))
         .as[(Double, Double)].head()
       assert(java.lang.Double.doubleToLongBits(r._1) ===
         java.lang.Double.doubleToLongBits(r._2))
@@ -48,7 +47,6 @@ class NativeKernelPropertySpec extends SparkSpec {
   }
 
   test("graft_sorted_intersect_count equals size(array_intersect) on arbitrary sorted sets") {
-    GraftFunctions.register(spark)
     forAll(sortedArraysGen) { case (a, b) =>
       val r = Seq((a, b)).toDF("a", "b")
         .select(
@@ -61,7 +59,6 @@ class NativeKernelPropertySpec extends SparkSpec {
   }
 
   test("graft_sorted_intersect_count: long-element variant equals set intersection") {
-    GraftFunctions.register(spark)
     val longPairGen: Gen[(Array[Long], Array[Long])] = for {
       na <- Gen.choose(0, 40)
       nb <- Gen.choose(0, 40)
@@ -77,7 +74,6 @@ class NativeKernelPropertySpec extends SparkSpec {
   }
 
   test("graft_hyperplane_bucket equals the unrolled projection on arbitrary vectors") {
-    GraftFunctions.register(spark)
     forAll(vecPairGen) { case (v, _) =>
       val planes = 8
       val s = HyperplaneBuckets.signs(planes, v.length)
@@ -123,7 +119,6 @@ class NativeKernelPropertySpec extends SparkSpec {
   }
 
   test("graft_bpe_token_count equals the greedy sequential merge fold on arbitrary inputs") {
-    GraftFunctions.register(spark)
     forAll(bpeCaseGen) { case (word, merges) =>
       val lhs = typedLit(merges.map(_._1))
       val rhs = typedLit(merges.map(_._2))

@@ -72,7 +72,7 @@ class PlanShapeSpec extends SparkSpec {
       (c, (1 to 8).map(d => (c % d).toFloat).toArray)).toSeq
     val probes = vecs.select(col("vec_id"),
       explode(graft.operators.Vectors.nearestCidsExpr(
-        spark, col("embedding"), cents, 2)).as("cid"))
+        col("embedding"), cents, 2)).as("cid"))
     val plan = physicalPlan(probes)
     assert(!plan.contains("Exchange") && !plan.contains("Join"))
     assert(plan.contains("Generate")) // the nprobe explode, nothing wider
@@ -302,9 +302,9 @@ class PlanShapeSpec extends SparkSpec {
     // spans has two deliberate branches (doc rebuild + gram window),
     // one tokenize each; the inferred-filter bug made it 3-4
     assert(regexCount(graft.operators.Dedup.substringSpans(d, "doc_id", "text", n = 3)) === 2)
-    // tf branch + df-frequency branch (exchange reuse merges them at
-    // runtime); the bug added a third/fourth occurrence per branch
-    assert(regexCount(graft.operators.TextAnalysis.tfidfTopK(d, "doc_id", "text")) === 2)
+    // one tf branch: document frequency is a window over the tf frame,
+    // not a second tokenize branch; the bug added a second/third occurrence
+    assert(regexCount(graft.operators.TextAnalysis.tfidfTopK(d, "doc_id", "text")) === 1)
     assert(regexCount(graft.operators.TextAnalysis.unigramSurprise(d, "doc_id", "text")) === 3) // tok + freq + total branches
     // minhash LSH: tokenize once per candidate-join side
     assert(regexCount(graft.operators.Dedup.minhashLsh(d, "doc_id", "text")) <= 4)

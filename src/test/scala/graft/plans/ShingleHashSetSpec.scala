@@ -25,7 +25,6 @@ class ShingleHashSetSpec extends SparkSpec {
   )
 
   test("native kernel is bit-identical to the HOF composition") {
-    GraftFunctions.register(spark)
     for (k <- Seq(1, 2, 3)) {
       val df = shapes.filter(_.size >= k).toDF("toks")
       val r = df.select(
@@ -37,7 +36,6 @@ class ShingleHashSetSpec extends SparkSpec {
   }
 
   test("null array yields null; null elements skip like concat_ws") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1, Some(Seq(Some("a"), Option.empty[String], Some("b"), Some("c")))),
       (2, Option.empty[Seq[Option[String]]])
@@ -51,7 +49,6 @@ class ShingleHashSetSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
     val df = shapes.toDF("toks")
     val withCodegen = df.select(
       call_function("graft_shingle_hash_set", col("toks"), lit(3)))

@@ -33,7 +33,6 @@ class SimhashFingerprintSpec extends SparkSpec {
   )
 
   test("native kernel is bit-identical to the HOF composition") {
-    GraftFunctions.register(spark)
     for (bits <- Seq(1, 12, 48)) {
       val df = shapes.toDF("toks")
       val r = df.select(
@@ -45,7 +44,6 @@ class SimhashFingerprintSpec extends SparkSpec {
   }
 
   test("null elements contribute -1 per bit, like md5(null) in the fold") {
-    GraftFunctions.register(spark)
     val df = Seq(
       Some(Seq(Option.empty[String], Some("x"))),
       Some(Seq(Option.empty[String])),
@@ -74,7 +72,6 @@ class SimhashFingerprintSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
     val df = shapes.toDF("toks")
     val withCodegen = df.select(
       call_function("graft_simhash", col("toks"), lit(48))).as[Long].collect()

@@ -7,7 +7,6 @@ class SortedIntersectCountSpec extends SparkSpec {
   import spark.implicits._
 
   test("merge-walk count equals array_intersect size on sorted inputs") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq("a", "b", "c", "d"), Seq("b", "d", "e")),
       (Seq("x"), Seq("y")),
@@ -22,7 +21,6 @@ class SortedIntersectCountSpec extends SparkSpec {
   }
 
   test("null input yields null") {
-    GraftFunctions.register(spark)
     val df = Seq((Some(Seq("a")), Option.empty[Seq[String]])).toDF("a", "b")
     assert(df.select(call_function("graft_sorted_intersect_count", col("a"), col("b")))
       .head.isNullAt(0))

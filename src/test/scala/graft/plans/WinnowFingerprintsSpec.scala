@@ -28,7 +28,6 @@ class WinnowFingerprintsSpec extends SparkSpec {
   )
 
   test("native kernel is bit-identical to the HOF composition") {
-    GraftFunctions.register(spark)
     for ((k, w) <- Seq((3, 4), (1, 1), (2, 7), (3, 100))) {
       val df = shapes.filter(_.size >= k).toDF("toks")
       val r = df.select(
@@ -40,7 +39,6 @@ class WinnowFingerprintsSpec extends SparkSpec {
   }
 
   test("null elements skip like concat_ws; null array yields null") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1, Some(Seq(Some("a"), Option.empty[String], Some("b"), Some("c")))),
       (2, Option.empty[Seq[Option[String]]])
@@ -54,7 +52,6 @@ class WinnowFingerprintsSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
     val df = shapes.toDF("toks")
     val withCodegen = df.select(
       call_function("graft_winnow_fps", col("toks"), lit(3), lit(4)))
