@@ -3,13 +3,17 @@ package graft.formats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.plans.GraftFunctions
 
 /** Row → line formatters (reference converters P1/P2): schema-driven
   * `Column` expression builders, composed per static schema at plan time —
   * the Spark-first replacement for the reference's per-row recursive
   * converters (`/root/reference/src/main/java/com/mercari/solution/util/
   * converter/StructToJsonConverter.java:29-135`, `StructToCsvConverter
-  * .java:32-43`). Everything stays inside whole-stage codegen.
+  * .java:32-43`). Everything stays inside whole-stage codegen: string
+  * values escape through one native expression
+  * ([[graft.plans.JsonEscape]]), so even a wide row's line compiles
+  * within the JVM's method-size limit.
   *
   * Formatting contract (FIXTURES.md §3): field order = schema order;
   * timestamps RFC3339 UTC `Z` (sub-second millis kept only when
@@ -29,7 +33,7 @@ object RowFormats {
 
   /** Scalar rendered as a JSON value fragment (with quotes where needed). */
   private def jsonValue(c: Column, dt: DataType): Column = dt match {
-    case StringType => concat(lit("\""), jsonEscape(c), lit("\""))
+    case StringType => concat(lit("\""), GraftFunctions.jsonEscape(c), lit("\""))
     case BinaryType => concat(lit("\""), base64(c), lit("\""))
     case DateType => concat(lit("\""), date_format(c, "yyyy-MM-dd"), lit("\""))
     case TimestampType | TimestampNTZType =>
@@ -45,37 +49,7 @@ object RowFormats {
           lit("]")))
     case st: StructType =>
       when(c.isNull, lit(null).cast("string")).otherwise(jsonObject(c, st))
-    case _ => concat(lit("\""), jsonEscape(c.cast("string")), lit("\""))
-  }
-
-  /** The control chars outside the common short-escape set `\n \r \t`:
-    * `\b` `\f` get their short forms, the rest of U+0000–U+001F go to
-    * `\uXXXX` — gson's JsonWriter escapes ALL of U+0000–U+001F this way
-    * (a raw control byte inside a JSON string is rejected by any strict
-    * reader; r13 sink fuzz found the \r/\t gap, ADVICE r13 the rest). */
-  private val rareControls: Seq[(String, String)] =
-    (0x00 to 0x1F).filterNot(Seq(0x09, 0x0A, 0x0D).contains).map { cp =>
-      val repl = cp match {
-        case 0x08 => "\\\\b"
-        case 0x0C => "\\\\f"
-        case i => f"\\\\u$i%04x"
-      }
-      (f"\\x$cp%02x", repl) // regex literal escape for the code point
-    }
-
-  /** Escapes `\` `"` and all of U+0000–U+001F (gson's writer set).
-    * The 27 rare-control replaces run behind an rlike guard: values
-    * without rare controls — all fixture data, virtually all real
-    * text — pay one regex scan, not 27. */
-  private def jsonEscape(c: Column): Column = {
-    val base =
-      regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        c, "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n"),
-        "\r", "\\\\r"), "\t", "\\\\t")
-    when(c.rlike("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"),
-      rareControls.foldLeft(base) { case (acc, (pat, repl)) =>
-        regexp_replace(acc, pat, repl)
-      }).otherwise(base)
+    case _ => concat(lit("\""), GraftFunctions.jsonEscape(c.cast("string")), lit("\""))
   }
 
   /** A field NAME rendered as a JSON object key (names are plan-time

@@ -1101,11 +1101,14 @@ object TextAnalysis {
     * Computed as H = ln(n) − (Σ c·ln c)/n over per-char counts c — the
     * algebraic form keeps every ln over an INTEGER argument (engines
     * agree bitwise) and the sum rides the 9-dp/decimal accumulation
-    * contract. Shape: one in-row char fan-out (SafeExplode), a
-    * (doc, char)-keyed count, a doc-keyed fold — both aggregates
-    * map-side combined, keys are splittable doc ids.
+    * contract. Shape: a pure scan, one native in-row pass per document
+    * ([[graft.plans.CharEntropyParts]]), no exchange.
     *
-    * Output: (idCol, n_chars, entropy), NULL entropy for empty docs. */
+    * Output: one row per INPUT row, (idCol, n_chars, entropy), computed
+    * from that row's own text; NULL entropy for empty docs. Rows that
+    * share an id are not pooled: two rows with id 7 give two output rows
+    * with id 7, each with its own row's entropy. Callers that want one
+    * value per id aggregate or dedupe the text first. */
   def charEntropy(df0: DataFrame, idCol: String, textCol: String): DataFrame = {
     val df = Dedup.widen(df0)
     // The aggregation is DOC-LOCAL: the old form exploded every character

@@ -43,6 +43,7 @@ object GraftFunctions {
   def kmPositions(key: Column, width: Int, k: Int): Column =
     native(KmPositions(key, lit(width), lit(k)))
   def charEntropyParts(text: Column): Column = native(CharEntropyParts(text))
+  def jsonEscape(s: Column): Column = native(JsonEscape(s))
 
   private def fn[E <: Expression](name: String, cls: Class[E])(build: Seq[Expression] => E) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
@@ -69,7 +70,8 @@ object GraftFunctions {
     fn("graft_winnow_fps", classOf[WinnowFingerprints])(c => WinnowFingerprints(c(0), c(1), c(2))),
     fn("graft_md5_prefix_long", classOf[Md5PrefixLong])(c => Md5PrefixLong(c(0), c(1))),
     fn("graft_km_positions", classOf[KmPositions])(c => KmPositions(c(0), c(1), c(2))),
-    fn("graft_char_entropy_parts", classOf[CharEntropyParts])(c => CharEntropyParts(c(0))))
+    fn("graft_char_entropy_parts", classOf[CharEntropyParts])(c => CharEntropyParts(c(0))),
+    fn("graft_json_escape", classOf[JsonEscape])(c => JsonEscape(c(0))))
 }
 
 /** `SparkSessionExtensions` hook: inject the `graft_*` SQL names at session

@@ -125,6 +125,17 @@ class Round9OpsSpec extends SparkSpec {
     assert(rows(3) == ((4L, 0L, None)))
   }
 
+  test("charEntropy: rows sharing an id are scored per row, not pooled") {
+    import spark.implicits._
+    val docs = Seq((7L, "aaaa"), (7L, "abab")).toDF("doc_id", "text")
+    val rows = TextAnalysis.charEntropy(docs, "doc_id", "text")
+      .select($"doc_id", $"n_chars", $"entropy").as[(Long, Long, Option[Double])]
+      .collect().sortBy(_._3)
+    val ln2 = math.rint(math.log(2) * 1e6) / 1e6
+    // pooled, "aaaaabab" would give one row: n 8, entropy of (6/8, 2/8)
+    assert(rows.toSeq === Seq((7L, 4L, Some(0.0)), (7L, 4L, Some(ln2))))
+  }
+
   test("charEntropy separates natural text from base64-ish noise and padding on the gate corpus") {
     import spark.implicits._
     val d = TableCatalog.load(spark, "/root/testdata/sf0.001", "documents")

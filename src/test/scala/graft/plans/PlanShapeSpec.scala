@@ -1,8 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.catalog.TableCatalog
+import graft.formats.RowFormats
 import graft.operators.{Decontamination, Sampling, TextAnalysis}
 
 /** Machine-checked physical-plan shape for the scale claims the operator
@@ -390,5 +395,36 @@ class PlanShapeSpec extends SparkSpec {
       .toDF("user_id", "event_type", "event_id", "ts", "value")
     val plan = physicalPlan(graft.streaming.EventStream.latestPerKeyBatch(ev))
     assert("hashpartitioning".r.findAllIn(plan.toLowerCase).size === 1)
+  }
+
+  test("the JSON text sink's wide-row stage compiles within the method limit (no regex escapes)") {
+    // the query-to-text JSON step's shape: lineitem ⋈ orders ⋈ customer ⋈
+    // nation, 20 columns (7 strings, 2 timestamps), split key + JSON line
+    // as DynamicFileSink projects them. A regex escape per string column
+    // grew this stage's method past 64 KB, and Spark fell back from codegen.
+    def t(name: String) = TableCatalog.load(spark, "/root/testdata/sf0.001", name)
+    val (l, o, c, n) = (t("lineitem"), t("orders"), t("customer"), t("nation"))
+    val df = l.join(o, l("l_orderkey") === o("o_orderkey"))
+      .join(c, o("o_custkey") === c("c_custkey"))
+      .join(n, c("c_nationkey") === n("n_nationkey"))
+      .select((l.columns.map(l(_)) ++ o.columns.map(o(_)) ++
+        Seq(c("c_name"), c("c_mktsegment"), n("n_name"))).toIndexedSeq: _*)
+    assert(df.columns.length === 20)
+    val lines = df.withColumn("__split", coalesce(col("o_orderpriority"), lit("")))
+      .select(col("__split"), RowFormats.line(df, "json").as("value"))
+    val optimized = lines.queryExecution.optimizedPlan.toString.toLowerCase
+    assert(!optimized.contains("regexp_replace") && !optimized.contains("rlike"))
+    assert(lines.collect().nonEmpty) // settles the adaptive plan
+    val stages = new AdaptiveSparkPlanHelper {}
+      .collect(lines.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }
+    assert(stages.exists(_.find {
+      case p: ProjectExec => p.output.exists(_.name == "value")
+      case _ => false
+    }.isDefined), "the JSON line projection must sit inside a codegen stage")
+    val limit = spark.conf.get("spark.sql.codegen.hugeMethodLimit").toInt
+    for (w <- stages) {
+      val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2) // throws past 64 KB
+      assert(stats.maxMethodCodeSize <= limit, w.simpleString(5))
+    }
   }
 }

@@ -4,6 +4,7 @@ import scala.util.Random
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.Tag
 import graft.SparkSpec
 
 /** Sink property fuzzing (verdict r12 item 6 — the NullGen discipline
@@ -26,9 +27,14 @@ import graft.SparkSpec
   *    path, not a key);
   *  - avro: field names must be avro-legal ([A-Za-z0-9_], not starting
   *    with a digit) — the format's own restriction, enforced by the
-  *    avro library at schema build. */
-@graft.SlowFuzz
+  *    avro library at schema build.
+  *
+  * The full runs are tagged `graft.SlowFuzz` (out of the default gate);
+  * the smoke test runs the json and csv round trips on a few seeds in
+  * every gate. */
 class SinkFuzzSpec extends SparkSpec {
+
+  private object SlowFuzz extends Tag(classOf[graft.SlowFuzz].getName)
 
   // ---- seeded generators -------------------------------------------------
 
@@ -123,23 +129,29 @@ class SinkFuzzSpec extends SparkSpec {
 
   // ---- json round trips --------------------------------------------------
 
-  test("50 seeded random schemas round-trip through the json DynamicFileSink") {
-    val r = new Random(13L)
-    for (i <- 0 until 50) {
+  /** `schemas` random schemas from `seed`, each written by the json sink,
+    * read back strictly and compared with the input. */
+  private def jsonRoundTrips(seed: Long, schemas: Int): Unit = {
+    val r = new Random(seed)
+    for (i <- 0 until schemas) {
       val schema = genSchema(r, avroSafe = false)
       val df = genFrame(r, schema, 12)
       val out = tmpDir(s"sinkfuzz_json_$i") + "/out"
       val res = DynamicFileSink.write(df, DynamicFileSink.Config(
         output = out, format = "json", splitField = Some("sk")))
-      assert(res.files.nonEmpty, s"schema $i: nothing written\n$schema")
+      assert(res.files.nonEmpty, s"seed $seed schema $i: nothing written\n$schema")
       val back = spark.read.schema(jsonReadSchema(schema))
         .option("mode", "FAILFAST").json(res.files: _*)
       val (got, want) = (canon(back), canon(jsonExpected(df)))
-      assert(got === want, s"schema $i diverged after json round trip\n$schema")
+      assert(got === want, s"seed $seed schema $i diverged after json round trip\n$schema")
     }
   }
 
-  test("split-key naming: every written file is <prefix><key>.json with the key escaped-correctly") {
+  test("50 seeded random schemas round-trip through the json DynamicFileSink", SlowFuzz) {
+    jsonRoundTrips(13L, 50)
+  }
+
+  test("split-key naming: every written file is <prefix><key>.json with the key escaped-correctly", SlowFuzz) {
     val r = new Random(21L)
     val schema = genSchema(r, avroSafe = false)
     val df = genFrame(r, schema, 30)
@@ -162,21 +174,22 @@ class SinkFuzzSpec extends SparkSpec {
 
   // ---- csv round trips (flat schemas — the P2 surface) --------------------
 
-  test("20 seeded flat schemas round-trip through the csv DynamicFileSink") {
-    // commons-csv DEFAULT quoting (quote on [\",\n\r], doubled embedded
-    // quotes) read back by Spark's csv reader with escape='\"' and
-    // multiLine for embedded newlines. CONTRACT (FIXTURES.md §3): csv
-    // cannot distinguish an empty string from null (both render as an
-    // empty field, as in the reference's converter) — the expected side
-    // maps "" → null accordingly.
-    val r = new Random(51L)
-    for (i <- 0 until 20) {
+  /** `schemas` random flat schemas from `seed` through the csv sink.
+    * commons-csv DEFAULT quoting (quote on [\",\n\r], doubled embedded
+    * quotes) read back by Spark's csv reader with escape='\"' and
+    * multiLine for embedded newlines. CONTRACT (FIXTURES.md §3): csv
+    * cannot distinguish an empty string from null (both render as an
+    * empty field, as in the reference's converter) — the expected side
+    * maps "" → null accordingly. */
+  private def csvRoundTrips(seed: Long, schemas: Int): Unit = {
+    val r = new Random(seed)
+    for (i <- 0 until schemas) {
       val schema = genSchema(r, avroSafe = false, flat = true)
       val df = genFrame(r, schema, 12)
       val out = tmpDir(s"sinkfuzz_csv_$i") + "/out"
       val res = DynamicFileSink.write(df, DynamicFileSink.Config(
         output = out, format = "csv", splitField = Some("sk")))
-      assert(res.files.nonEmpty, s"schema $i: nothing written\n$schema")
+      assert(res.files.nonEmpty, s"seed $seed schema $i: nothing written\n$schema")
       val back = spark.read.schema(jsonReadSchema(schema))
         .option("mode", "FAILFAST").option("multiLine", true)
         .option("escape", "\"")
@@ -190,13 +203,24 @@ class SinkFuzzSpec extends SparkSpec {
         case (d, _) => d
       }
       val (got, want) = (canon(back), canon(expected))
-      assert(got === want, s"schema $i diverged after csv round trip\n$schema")
+      assert(got === want, s"seed $seed schema $i diverged after csv round trip\n$schema")
+    }
+  }
+
+  test("20 seeded flat schemas round-trip through the csv DynamicFileSink", SlowFuzz) {
+    csvRoundTrips(51L, 20)
+  }
+
+  test("smoke: a few seeds of random schemas round-trip through the json and csv sinks") {
+    for (seed <- 1L to 3L) {
+      jsonRoundTrips(seed, 2)
+      csvRoundTrips(seed, 2)
     }
   }
 
   // ---- avro round trips --------------------------------------------------
 
-  test("25 seeded avro-safe schemas round-trip through the avro DynamicFileSink") {
+  test("25 seeded avro-safe schemas round-trip through the avro DynamicFileSink", SlowFuzz) {
     val r = new Random(31L)
     for (i <- 0 until 25) {
       val schema = genSchema(r, avroSafe = true)
@@ -216,7 +240,7 @@ class SinkFuzzSpec extends SparkSpec {
 
   // ---- shard export ------------------------------------------------------
 
-  test("ShardExport: random schemas round-trip with exact shard names and deterministic membership") {
+  test("ShardExport: random schemas round-trip with exact shard names and deterministic membership", SlowFuzz) {
     val r = new Random(41L)
     for (shards <- Seq(1, 4, 16)) {
       val schema = genSchema(r, avroSafe = false)
