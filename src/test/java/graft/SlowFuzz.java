@@ -14,8 +14,9 @@ import org.scalatest.TagAnnotation;
  * driver's verify window always fits the deterministic operator/parity
  * suites — the r16 gate died mid-suite when the full 52-minute run
  * outlived the session (VERDICT r16 item 2). The fuzz suites still run
- * via `GRAFT_FULL_SUITE=1 sbt test` and their per-round records
- * (FUZZ_r*.json) come from the dedicated fuzz mains either way.
+ * via `GRAFT_FULL_SUITE=1 sbt test`, the untagged FuzzSmokeSpec runs every
+ * fuzz surface in the default gate, and the per-round records
+ * (FUZZ_r*.json) come from the one fuzz runner, `graft.Fuzz`, either way.
  */
 @TagAnnotation
 @Inherited

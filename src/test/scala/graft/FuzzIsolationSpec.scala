@@ -2,62 +2,24 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r15 verdict's fuzz-hygiene lint (item 7): the differential-fuzz
-  * harness (`graft.fuzz.*` + the `graft.Fuzz*` runner mains) is
-  * load-bearing test infrastructure that lives in main by design — but
-  * nothing on a GATE path may reach it. This spec makes the "true by
-  * inspection" claim mechanical: no main source outside the harness may
-  * reference a fuzz package or a Fuzz* symbol, so `SparkEntry.queries`
-  * (and everything it can transitively touch) stays fuzz-free even as
-  * the harness grows a new surface every round. Driver-side collect()
-  * hygiene exemptions for `graft/fuzz` stay sound for the same reason.
-  */
+/** The differential-fuzz harness (`graft.fuzz.*`, `graft.Fuzz`, SqlFuzz,
+  * NestedFuzz) lives in the test source set, so the compiler already
+  * stops engine code from referencing it. What the compiler does not stop
+  * is harness code being added back under `src/main`, where it would
+  * ship with the engine; this spec pins that. */
 class FuzzIsolationSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[java.io.File] = {
+  test("no graft.fuzz package and no Fuzz object under src/main") {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(new java.io.File("src/main/scala/graft"))
-  }
-
-  private def isHarness(f: java.io.File): Boolean = {
-    val p = f.getPath.replace('\\', '/')
-    p.contains("/graft/fuzz/") ||
-      (p.matches(".*/graft/Fuzz[A-Z]\\w*\\.scala"))
-  }
-
-  test("no gate-reachable main source references the fuzz harness") {
-    val offenders = for {
-      f <- mainSources if !isHarness(f)
-      text = {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        val raw = try src.mkString finally src.close()
-        // scaladoc cross-links ([[graft.fuzz.GraphFuzz]]) are legitimate
-        // documentation — only CODE references count, so strip comments
-        raw.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", " ")
-      }
-      // any of: FQN/import of the fuzz package, a relative fuzz.X
-      // reference from package graft, or a Fuzz* runner symbol use
-      hit <- Seq(
-        "graft\\.fuzz".r.findFirstIn(text).map(_ => "graft.fuzz reference"),
-        "(?<![\\w.])fuzz\\.[A-Z]".r.findFirstIn(text).map(_ => "relative fuzz.X reference"),
-        "\\bFuzz[A-Z]\\w*\\s*[.(]".r.findFirstIn(text).map(_ => "Fuzz* symbol use")
-      ).flatten.headOption
-    } yield s"${f.getPath}: $hit"
-    assert(offenders.isEmpty,
-      "fuzz harness leaked onto a gate-reachable path:\n" + offenders.mkString("\n"))
-  }
-
-  test("the harness itself stays quarantined under graft.fuzz / graft.Fuzz*") {
-    // every file declaring `package graft.fuzz` must live in graft/fuzz/
-    val misplaced = mainSources.filterNot(isHarness).filter { f =>
+    val offenders = walk(new java.io.File("src/main/scala")).filter { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val text = try src.mkString finally src.close()
-      text.linesIterator.exists(_.trim == "package graft.fuzz")
+      text.linesIterator.exists(_.trim == "package graft.fuzz") ||
+        "(?m)^\\s*object Fuzz(\\b|[A-Z])".r.findFirstIn(text).isDefined
     }
-    assert(misplaced.isEmpty,
-      "files declaring package graft.fuzz outside graft/fuzz/: " +
-        misplaced.map(_.getPath).mkString(", "))
+    assert(offenders.isEmpty,
+      "fuzz harness under src/main: " + offenders.map(_.getPath).mkString(", "))
   }
 }

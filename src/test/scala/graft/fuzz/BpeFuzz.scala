@@ -30,10 +30,10 @@ import scala.util.Random
   * boundary words.
   *
   * The fast deterministic subset runs in BpeFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzBpe]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz bpe` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object BpeFuzz {
+object BpeFuzz extends Surface {
 
   final case class BParams(rounds: Int, minFreq: Long, maxWords: Int)
 
@@ -191,5 +191,22 @@ object BpeFuzz {
       if (got2 != wantM) errs += s"bpe_train distributed repartition(7) drifted"
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Seq[CorpusFuzz.Doc], BParams)
+  val name = "bpe"
+  val sets = 30
+  private def deep(i: Int) = i % 4 == 0
+  def draw(r: Random, seed: Long, i: Int): In = bpeCorpus(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in._1, in._2, deep(i))
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val (docs, p) = in
+    val minimal = shrink(docs)(runOne(spark, _, p, deep(i)))
+    s"(${minimal.size} docs, $p): ${CorpusFuzz.show(minimal)}"
   }
 }

@@ -6,7 +6,7 @@ import scala.util.Random
 /** Fast deterministic subset of the BPE differential fuzz: 2 seeds ×
   * 3 corpora (one deep: distributed partitioning invariance) through
   * both trainer dispatch paths + encode vs the Sennrich-contract
-  * replay. The full multi-seed sweep runs via `graft.FuzzBpe`
+  * replay. The full multi-seed sweep runs via `graft.Fuzz bpe`
   * (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class BpeFuzzSpec extends SparkSpec {
@@ -41,15 +41,7 @@ class BpeFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 3 corpora: both trainer paths + encode match the replay") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 3) {
-        val (docs, p) = BpeFuzz.bpeCorpus(r)
-        val errs = BpeFuzz.runOne(spark, docs, p, deep = i == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed corpus=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, BpeFuzz, Seq(12L, 99L), 3)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

@@ -25,10 +25,10 @@ import scala.util.Random
   * family); the final comparison is the exact (doc_id, text) row set.
   *
   * The fast deterministic subset runs in ChainFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzChains]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz chains` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object ChainFuzz {
+object ChainFuzz extends Surface {
   import CorpusFuzz.Doc
 
   sealed trait Stage
@@ -199,5 +199,26 @@ object ChainFuzz {
       df = got.toSeq.map { case (id, t) => (id, t.orNull) }.toDF("doc_id", "text")
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Seq[Doc], Seq[Stage])
+  val name = "chains"
+  val sets = 40
+  override val seeds = Seq(12L, 99L, 7L)
+  def draw(r: Random, seed: Long, i: Int): In = {
+    val (docs, _, _) = CorpusFuzz.corpus(r)
+    (docs, randomChain(r))
+  }
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in._1, in._2)
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val (docs, chain) = in
+    val minimal = shrink(docs)(runOne(spark, _, chain))
+    s"(${minimal.size} docs, chain=[${chain.mkString(" → ")}]): " +
+      CorpusFuzz.show(minimal)
   }
 }

@@ -9,7 +9,7 @@ import scala.util.Random
   * (round-14 verdict item 3): 2 seeds × 4 random chains over the
   * CorpusFuzz adversarial corpora, Spark composition vs composed
   * reference models. The full multi-seed sweep runs via
-  * `graft.FuzzChains` (FUZZ_r<N>.json). */
+  * `graft.Fuzz chains` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class ChainFuzzSpec extends SparkSpec {
 
@@ -36,16 +36,7 @@ class ChainFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 4 chains: Spark composition matches the composed reference models") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 4) {
-        val (docs, _, _) = CorpusFuzz.corpus(r)
-        val chain = ChainFuzz.randomChain(r)
-        val errs = ChainFuzz.runOne(spark, docs, chain)
-        assert(errs.isEmpty,
-          s"seed=$seed chain=$i [${chain.mkString(" → ")}] diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, ChainFuzz, Seq(12L, 99L), 4)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

@@ -26,10 +26,10 @@ import scala.util.Random
   * U+0307), very long single tokens, and punctuation-only docs.
   *
   * The fast deterministic subset runs in CorpusFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzCorpus]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz corpus` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object CorpusFuzz {
+object CorpusFuzz extends Surface {
 
   final case class Doc(id: Long, text: Option[String])
   final case class Params(k: Int, minJaccard: Double, maxDf: Long, prefixK: Int,
@@ -702,4 +702,26 @@ object CorpusFuzz {
     }
     errs.result()
   }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Seq[Doc], Params, Seq[(Long, Long)])
+  val name = "corpus"
+  val sets = 50
+  private def deep(i: Int) = i % 5 == 0
+  def draw(r: Random, seed: Long, i: Int): In = corpus(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in._1, in._2, in._3, deep(i))
+  /** Planted-dup recall is left out of the shrink: pair ids drop out of
+    * subsets. */
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val (docs, p, _) = in
+    val minimal = shrink(docs)(runOne(spark, _, p, Seq.empty, deep(i)))
+    s"(${minimal.size} docs, $p): ${show(minimal)}"
+  }
+
+  def show(docs: Seq[Doc]): String =
+    docs.map(d => s"${d.id}=${d.text}").mkString(" | ")
 }

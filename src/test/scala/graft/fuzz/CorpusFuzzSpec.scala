@@ -9,7 +9,7 @@ import scala.util.Random
   * verdict item 5). The generator's contract (seeded determinism, shape
   * coverage) plus a 2-seed × 8-corpus differential against the
   * plain-Scala reference models — enough to catch a contract break in
-  * CI; the full 5-seed × 50-corpus sweep runs via `graft.FuzzCorpus`
+  * CI; the full 5-seed × 50-corpus sweep runs via `graft.Fuzz corpus`
   * and its zero-divergence record is committed per round
   * (FUZZ_r<N>.json). */
 @graft.SlowFuzz
@@ -40,15 +40,7 @@ class CorpusFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 8 corpora: Spark operators match the plain-Scala reference models") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 8) {
-        val (docs, p, dupPairs) = CorpusFuzz.corpus(r)
-        val errs = CorpusFuzz.runOne(spark, docs, p, dupPairs, deep = i % 4 == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed corpus=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, CorpusFuzz, Seq(12L, 99L), 8)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

@@ -30,10 +30,10 @@ import scala.util.Random
   * determinism must not depend on density).
   *
   * The fast deterministic subset runs in GraphFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzGraphs]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz graphs` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object GraphFuzz {
+object GraphFuzz extends Surface {
 
   final case class GParams(lpaRounds: Int, prIters: Int, damping: Double,
                            ccMaxIter: Int, kcoreRounds: Int, kcoreK: Int,
@@ -373,5 +373,23 @@ object GraphFuzz {
       if (got2 != lpaWant) errs += s"lpa repartition(7) drifted: got $got2 want $lpaWant"
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Seq[(Long, Long)], Map[Long, String], GParams)
+  val name = "graphs"
+  val sets = 50
+  private def deep(i: Int) = i % 4 == 0
+  def draw(r: Random, seed: Long, i: Int): In = graphSet(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in._1, in._2, in._3, deep(i))
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val (es, mem, p) = in
+    val minimal = shrink(es)(runOne(spark, _, mem, p, deep(i)))
+    s"(${minimal.size} edges, $p): " +
+      minimal.map(e => s"${e._1}-${e._2}").mkString(" ")
   }
 }

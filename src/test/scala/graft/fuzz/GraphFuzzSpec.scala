@@ -9,7 +9,7 @@ import scala.util.Random
   * 2 seeds × 4 adversarial graphs (one deep: forced star-contraction +
   * partitioning invariance) through CC/merge/LPA/PageRank/GraphStats vs
   * the plain-Scala reference models. The full multi-seed sweep runs via
-  * `graft.FuzzGraphs` (FUZZ_r<N>.json). */
+  * `graft.Fuzz graphs` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class GraphFuzzSpec extends SparkSpec {
 
@@ -51,15 +51,7 @@ class GraphFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 4 graphs: Spark operators match the reference models") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 4) {
-        val (es, mem, p) = GraphFuzz.graphSet(r)
-        val errs = GraphFuzz.runOne(spark, es, mem, p, deep = i == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed set=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, GraphFuzz, Seq(12L, 99L), 4)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

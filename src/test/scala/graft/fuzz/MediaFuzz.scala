@@ -53,10 +53,10 @@ import scala.util.Random
   * REAL mapPartitions seam in one batch per set.
   *
   * The fast deterministic subset runs in MediaFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzMedia]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz media` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object MediaFuzz {
+object MediaFuzz extends Surface {
 
   final case class MPayload(id: Long, kind: String, bytes: Array[Byte],
                             desc: String) {
@@ -710,5 +710,21 @@ object MediaFuzz {
     val lenientErrs = checkLenient(spark, set)
     val deepErrs = if (deep) checkRoundTrip(rng) else Nil
     strictErrs ++ lenientErrs ++ deepErrs
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = Seq[MPayload]
+  val name = "media"
+  val sets = 40
+  def draw(r: Random, seed: Long, i: Int): In = mediaSet(r, seed * 100000L + i)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in, deep = i % 4 == 0, r)
+  /** Shrinks without the deep round trip, which reads only `rng`. */
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val minimal = shrink(in)(runOne(spark, _, deep = false, new Random(0L)))
+    s"(${minimal.size} payloads): " + minimal.mkString(" | ")
   }
 }

@@ -8,7 +8,7 @@ import scala.util.Random
   * fuzz: 2 seeds × 3 sets (one deep: encode→decode layout round-trip)
   * through the strict parsers and lenient DataFrame quarantine twins vs
   * the independent decoder models. The full multi-seed sweep runs via
-  * `graft.FuzzMedia` (FUZZ_r<N>.json). */
+  * `graft.Fuzz media` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class MediaFuzzSpec extends SparkSpec {
 
@@ -46,14 +46,8 @@ class MediaFuzzSpec extends SparkSpec {
   }
 
   test("differential subset: strict + lenient vs models, zero divergences") {
-    for (seed <- Seq(12L, 2026L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 3) {
-        val set = MediaFuzz.mediaSet(r, seed * 1000 + i)
-        val errs = MediaFuzz.runOne(spark, set, deep = i == 0, r)
-        assert(errs.isEmpty, s"seed=$seed set=$i:\n" + errs.mkString("\n"))
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, MediaFuzz, Seq(12L, 2026L), 3)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 
   test("model rejects exactly the documented codes on hand-built damage") {

@@ -30,10 +30,10 @@ import scala.util.Random
   * counts of 0, and unicode ids (md5 over UTF-8 bytes).
   *
   * The fast deterministic subset runs in SampleFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzSamples]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz samples` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object SampleFuzz {
+object SampleFuzz extends Surface {
 
   final case class SRow(id: String, stratum: Option[String], value: Long,
                         weight: Option[Double], ntok: Long,
@@ -395,5 +395,22 @@ object SampleFuzz {
       if (got11 != want5) errs += s"temperature repartition(7) drifted"
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Seq[SRow], SParams)
+  val name = "samples"
+  val sets = 50
+  private def deep(i: Int) = i % 4 == 0
+  def draw(r: Random, seed: Long, i: Int): In = sampleSet(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in._1, in._2, deep(i))
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val (rows, p) = in
+    val minimal = shrink(rows)(runOne(spark, _, p, deep(i)))
+    s"(${minimal.size} rows, $p): " + minimal.mkString(" | ")
   }
 }

@@ -7,7 +7,7 @@ import scala.util.Random
   * 2 seeds × 4 adversarial sets (one deep: DSIR + partitioning
   * invariance) through the Sampling operators vs the plain-Scala
   * contract replays. The full multi-seed sweep runs via
-  * `graft.FuzzSamples` (FUZZ_r<N>.json). */
+  * `graft.Fuzz samples` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class SampleFuzzSpec extends SparkSpec {
 
@@ -68,15 +68,7 @@ class SampleFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 4 sets: Spark samplers match the contract replays") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 4) {
-        val (rows, p) = SampleFuzz.sampleSet(r)
-        val errs = SampleFuzz.runOne(spark, rows, p, deep = i == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed set=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, SampleFuzz, Seq(12L, 99L), 4)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

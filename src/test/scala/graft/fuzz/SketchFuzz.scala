@@ -30,10 +30,10 @@ import scala.util.Random
   * false positives — the outcomes must still match bit-for-bit.
   *
   * The fast deterministic subset runs in SketchFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzSketches]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz sketches` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object SketchFuzz {
+object SketchFuzz extends Surface {
 
   final case class SParams(kmvK: Int, hllP: Int, cmsWidth: Int, cmsDepth: Int,
                            mBits: Int, nHashes: Int, alpha: Double,
@@ -455,5 +455,23 @@ object SketchFuzz {
       if (cmsGot2 != cmsWant) errs += s"cms repartition(7) drifted"
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = SSet
+  val name = "sketches"
+  val sets = 50
+  private def deep(i: Int) = i % 4 == 0
+  def draw(r: Random, seed: Long, i: Int): In = valueSet(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in, deep(i))
+  /** Shrinks the occurrence rows only. */
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val minimal = shrink(in.occ)(sub => runOne(spark, in.copy(occ = sub), deep(i)))
+    s"(${minimal.size} occ rows, ${in.p}): " +
+      minimal.map { case (s, k) => s"$s=$k" }.mkString(" | ")
   }
 }

@@ -9,7 +9,7 @@ import scala.util.Random
   * 2 seeds × 3 adversarial value sets (one deep) through
   * KMV/HLL/CMS/Bloom/DDSketch/quantile-sample vs the exact plain-Scala
   * md5 reference models. The full multi-seed sweep runs via
-  * `graft.FuzzSketches` (FUZZ_r<N>.json). */
+  * `graft.Fuzz sketches` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class SketchFuzzSpec extends SparkSpec {
 
@@ -51,15 +51,7 @@ class SketchFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 3 sets: Spark sketches match the exact reference models") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 3) {
-        val set = SketchFuzz.valueSet(r)
-        val errs = SketchFuzz.runOne(spark, set, deep = i == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed set=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, SketchFuzz, Seq(12L, 99L), 3)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

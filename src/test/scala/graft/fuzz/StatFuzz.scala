@@ -30,9 +30,9 @@ import scala.util.Random
   * keys/values through the documented SQL ternary semantics.
   *
   * The fast deterministic subset runs in StatFuzzSpec; the full sweep
-  * runs via [[graft.FuzzStats]] (FUZZ_r<N>.json).
+  * runs via `graft.Fuzz stats` (FUZZ_r<N>.json).
   */
-object StatFuzz {
+object StatFuzz extends Surface {
 
   final case class SeriesRow(key: String, period: Long, value: Long)
   final case class GroupRow(group: String, value: Long)
@@ -525,4 +525,16 @@ object StatFuzz {
 
     errs.result()
   }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = StatSet
+  val name = "stats"
+  val sets = 50
+  def draw(r: Random, seed: Long, i: Int): In = statSet(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in)
+  def repro(spark: SparkSession, in: In, i: Int): String = s"set: $in"
 }

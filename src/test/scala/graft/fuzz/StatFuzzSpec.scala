@@ -6,7 +6,7 @@ import scala.util.Random
 /** Fast deterministic subset of the inline-analytics differential fuzz:
   * 2 seeds × 3 adversarial frame sets through Series / StatTests /
   * DataQuality vs the plain-Scala contract replays. The full sweep runs
-  * via `graft.FuzzStats` (FUZZ_r<N>.json). */
+  * via `graft.Fuzz stats` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class StatFuzzSpec extends SparkSpec {
 
@@ -44,13 +44,7 @@ class StatFuzzSpec extends SparkSpec {
   }
 
   test("differential subset: operators vs models, zero divergences") {
-    for (seed <- Seq(12L, 2026L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 3) {
-        val set = StatFuzz.statSet(r)
-        val errs = StatFuzz.runOne(spark, set)
-        assert(errs.isEmpty, s"seed=$seed set=$i:\n" + errs.mkString("\n"))
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, StatFuzz, Seq(12L, 2026L), 3)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

@@ -45,12 +45,12 @@ import scala.util.Random
   * divergence is a streaming-semantics bug, not a value-arithmetic one.
   *
   * The fast deterministic subset runs in StreamFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzStream]] (FUZZ_r<N>.json),
+  * multi-seed sweep runs via `graft.Fuzz stream` (FUZZ_r<N>.json),
   * which also runs the randomized checkpoint-kill-and-resume round
   * (file-source slices through [[EventStream.streamUpsert]]) every 4th
   * set.
   */
-object StreamFuzz {
+object StreamFuzz extends Surface {
 
   final case class Ev(user: Long, etype: String, id: Long, tsMicros: Long,
                       value: Double)
@@ -599,4 +599,30 @@ object StreamFuzz {
         r.getLong(2), r.getDouble(3)))
     cmp("restartUpsert", got, bt)
   }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Sched, Sched, Long)
+  val name = "stream"
+  val sets = 20
+  def draw(r: Random, seed: Long, i: Int): In = {
+    val s = schedule(r, withLate = i % 2 == 1)
+    val (ss, gap) = sessionSchedule(r)
+    (s, ss, gap)
+  }
+  /** The interval-join differential and every 4th set's checkpoint-kill
+    * round read their shapes from `r`. */
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] = {
+    val (s, ss, gap) = in
+    runOne(spark, s) ++ runSessions(spark, ss, gap) ++
+      runIntervalJoin(spark, r) ++
+      (if (i % 4 == 0)
+        runRestart(spark, s, java.nio.file.Files.createTempDirectory("stfuzz").toString,
+          killAfter = 1 + r.nextInt(3))
+      else Nil)
+  }
+  def repro(spark: SparkSession, in: In, i: Int): String =
+    "schedule: " + in._1.batches.map(_.mkString(",")).mkString(" || ")
 }

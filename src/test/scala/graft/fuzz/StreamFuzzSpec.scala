@@ -7,7 +7,7 @@ import scala.util.Random
   * 2 schedules (one with late-beyond-watermark rows) through the
   * MemoryStream differentials, the session differential, and one
   * checkpoint-kill round. The full multi-seed sweep runs via
-  * `graft.FuzzStream` (FUZZ_r<N>.json). */
+  * `graft.Fuzz stream` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class StreamFuzzSpec extends SparkSpec {
 
@@ -42,19 +42,8 @@ class StreamFuzzSpec extends SparkSpec {
   }
 
   test("differential subset: stream faces vs batch twins, zero divergences") {
-    for (seed <- Seq(12L, 2026L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 2) {
-        val s = StreamFuzz.schedule(r, withLate = i == 1)
-        val errs = StreamFuzz.runOne(spark, s)
-        assert(errs.isEmpty, s"seed=$seed set=$i:\n" + errs.mkString("\n"))
-      }
-      val (ss, gap) = StreamFuzz.sessionSchedule(r)
-      val serrs = StreamFuzz.runSessions(spark, ss, gap)
-      assert(serrs.isEmpty, s"seed=$seed sessions:\n" + serrs.mkString("\n"))
-      val jerrs = StreamFuzz.runIntervalJoin(spark, r)
-      assert(jerrs.isEmpty, s"seed=$seed join:\n" + jerrs.mkString("\n"))
-    }
+    val divergent = graft.Fuzz.sweep(spark, StreamFuzz, Seq(12L, 2026L), 2)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 
   test("checkpoint-kill round: resume keeps batch parity") {

@@ -33,10 +33,10 @@ import scala.util.Random
   * null contract), and empty sides.
   *
   * The fast deterministic subset runs in TemporalFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzTemporal]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz temporal` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object TemporalFuzz {
+object TemporalFuzz extends Surface {
 
   // all timestamps are micros-since-epoch Longs in the model domain
   final case class LRow(lid: Long, key: Long, lts: Long)
@@ -455,5 +455,44 @@ object TemporalFuzz {
       if (carryMismatch(got, want)) errs += s"asof_backward repartition drifted: got $got want $want"
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = TSet
+  val name = "temporal"
+  val sets = 50
+  private def deep(i: Int) = i % 4 == 0
+  def draw(r: Random, seed: Long, i: Int): In = tempoSet(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in, deep(i))
+  /** Shrinks EVERY input collection, not just events: 6 of the 12
+    * differentials (asof/range/overlap, the tier's likeliest bug class)
+    * depend only on left/right/ivals, and an events-only pass would leave
+    * exactly those unshrunk. One ddmin per collection, each starting from
+    * a still-failing set, so ddmin's precondition holds at every stage. */
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    var cur = in
+    def pass[A](items: TSet => Seq[A], put: (TSet, Seq[A]) => TSet): Unit = {
+      val run = (xs: Seq[A]) => runOne(spark, put(cur, xs), deep(i))
+      val m = shrink(items(cur), maxEvals = 60)(run)
+      if (fails(run(m))) cur = put(cur, m)
+    }
+    pass[ERow](_.events, (s, xs) => s.copy(events = xs))
+    pass[LRow](_.left, (s, xs) => s.copy(left = xs))
+    pass[RRow](_.right, (s, xs) => s.copy(right = xs))
+    pass[RRow](_.rightDup, (s, xs) => s.copy(rightDup = xs))
+    pass[IRow](_.ivalsL, (s, xs) => s.copy(ivalsL = xs))
+    pass[IRow](_.ivalsR, (s, xs) => s.copy(ivalsR = xs))
+    s"(L=${cur.left.size} R=${cur.right.size} Rd=${cur.rightDup.size} " +
+      s"ev=${cur.events.size} iL=${cur.ivalsL.size} iR=${cur.ivalsR.size}, ${in.p}): " +
+      (cur.left.map(l => s"L ${l.lid}/k${l.key}@${l.lts}") ++
+       cur.right.map(x => s"R ${x.rid}/k${x.key}@${x.rts}=${x.v}/${x.s}") ++
+       cur.ivalsL.map(v => s"IL ${v.iid}/k${v.key}[${v.is},${v.ie}]") ++
+       cur.ivalsR.map(v => s"IR ${v.iid}/k${v.key}[${v.is},${v.ie}]") ++
+       cur.events.map(e => s"E ${e.user_id}/${e.event_type}@${e.ts}=${e.value}"))
+        .mkString(" | ")
   }
 }

@@ -7,7 +7,7 @@ import scala.util.Random
   * 2 seeds × 4 adversarial sets (one deep: partitioning invariance)
   * through the as-of / range / overlap joins and the EventStream batch
   * faces vs the plain-Scala reference models. The full multi-seed sweep
-  * runs via `graft.FuzzTemporal` (FUZZ_r<N>.json). */
+  * runs via `graft.Fuzz temporal` (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class TemporalFuzzSpec extends SparkSpec {
 
@@ -80,15 +80,7 @@ class TemporalFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 4 sets: Spark operators match the reference models") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 4) {
-        val set = TemporalFuzz.tempoSet(r)
-        val errs = TemporalFuzz.runOne(spark, set, deep = i == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed set=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, TemporalFuzz, Seq(12L, 99L), 4)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

@@ -35,10 +35,10 @@ import scala.util.Random
   * is |x| < 1e15 (decimal(30,15) would overflow-to-null past it).
   *
   * The fast deterministic subset runs in VectorFuzzSpec; the full
-  * multi-seed sweep runs via [[graft.FuzzVectors]] and is recorded in
+  * multi-seed sweep runs via `graft.Fuzz vectors` and is recorded in
   * FUZZ_r<N>.json per round.
   */
-object VectorFuzz {
+object VectorFuzz extends Surface {
 
   final case class Vec(id: Long, v: Array[Float])
   final case class VParams(dims: Int, k: Int, planes: Int, nprobe: Int,
@@ -652,5 +652,23 @@ object VectorFuzz {
           s"repartition(7)=${fmt(many)}"
     }
     errs.result()
+  }
+
+  // ------------------------------------------------------------------
+  // surface
+  // ------------------------------------------------------------------
+
+  type In = (Seq[Vec], VParams)
+  val name = "vectors"
+  val sets = 50
+  private def deep(i: Int) = i % 5 == 0
+  def draw(r: Random, seed: Long, i: Int): In = vectorSet(r)
+  def check(spark: SparkSession, in: In, i: Int, r: Random): Seq[String] =
+    runOne(spark, in._1, in._2, deep(i))
+  def repro(spark: SparkSession, in: In, i: Int): String = {
+    val (vs, p) = in
+    val minimal = shrink(vs)(runOne(spark, _, p, deep(i)))
+    s"(${minimal.size} vecs, $p): " +
+      minimal.map(v => s"${v.id}=[${v.v.mkString(",")}]").mkString(" | ")
   }
 }

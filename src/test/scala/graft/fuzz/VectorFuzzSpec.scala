@@ -10,7 +10,7 @@ import scala.util.Random
   * determinism, adversarial shape coverage) plus a 2-seed × 4-set
   * differential against the plain-Scala reference models — enough to
   * catch a contract break in CI; the full 5-seed × 50-set sweep runs
-  * via `graft.FuzzVectors` and its zero-divergence record is committed
+  * via `graft.Fuzz vectors` and its zero-divergence record is committed
   * per round (FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class VectorFuzzSpec extends SparkSpec {
@@ -55,15 +55,7 @@ class VectorFuzzSpec extends SparkSpec {
   }
 
   test("2 seeds x 4 sets: Spark similarity tier matches the plain-Scala reference models") {
-    for (seed <- Seq(12L, 99L)) {
-      val r = new Random(seed)
-      for (i <- 0 until 4) {
-        val (vs, p) = VectorFuzz.vectorSet(r)
-        val errs = VectorFuzz.runOne(spark, vs, p, deep = i == 0)
-        assert(errs.isEmpty,
-          s"seed=$seed set=$i diverged:\n${errs.mkString("\n")}")
-        spark.catalog.clearCache()
-      }
-    }
+    val divergent = graft.Fuzz.sweep(spark, VectorFuzz, Seq(12L, 99L), 4)
+    assert(divergent.isEmpty, divergent.mkString("\n"))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * header pins (null-guarded fingerprints, guarded split_part, no bare
   * list_distinct), and Spark executability of every generated shape
   * over the generated nested fixture. The cross-engine half runs via
-  * `graft.FuzzNested` + `tools/check.py`; its zero-divergence record is
+  * `graft.Fuzz nested` + `tools/check.py`; its zero-divergence record is
   * committed per round (BUILDLOG + FUZZ_r<N>.json). */
 @graft.SlowFuzz
 class NestedFuzzSpec extends SparkSpec {

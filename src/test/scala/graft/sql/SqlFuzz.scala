@@ -1,5 +1,6 @@
 package graft.sql
 
+import org.apache.spark.sql.SparkSession
 import scala.util.Random
 
 /** Seeded differential-SQL fuzz generator (round-12 verdict item 5):
@@ -7,7 +8,7 @@ import scala.util.Random
   * string that runs UNCHANGED on both Spark and DuckDB — the
   * `DummyGenericRecordGenerator` discipline
   * (reference `src/test/java/.../DummyGenericRecordGenerator.java:61-66`)
-  * applied to queries instead of records. The harness (graft.Fuzz) runs
+  * applied to queries instead of records. The harness (`graft.Fuzz sql`) runs
   * each on Spark and dumps the same layout as graft.Verify, so
   * tools/check.py hash-compares the two engines row-for-row.
   *
@@ -427,5 +428,15 @@ object SqlFuzz {
   def queries(seed: Long, n: Int): Seq[(String, String)] = {
     val r = new Random(seed)
     (0 until n).map(i => (f"fuzz_q$i%03d", genOne(r)))
+  }
+
+  /** The shapes of `queries(seed, n)` that fail on Spark over the fixture
+    * tables under `sfDir`, each with its error. */
+  def sparkFailures(spark: SparkSession, sfDir: String, seed: Long, n: Int): Seq[String] = {
+    graft.catalog.TableCatalog.register(spark, sfDir)
+    queries(seed, n).flatMap { case (name, sql) =>
+      try { spark.sql(sql).collect(); None }
+      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    }
   }
 }

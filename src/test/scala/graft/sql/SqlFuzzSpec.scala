@@ -7,7 +7,7 @@ import graft.SparkSpec
   * or the committed FUZZ evidence is unreproducible), template coverage,
   * and Spark executability of every generated shape on the real
   * sf0.001 fixture. The cross-engine half of the differential runs via
-  * `graft.Fuzz` + `tools/check.py` (DuckDB is driver-side tooling, not a
+  * `graft.Fuzz sql` + `tools/check.py` (DuckDB is driver-side tooling, not a
   * JVM dependency); its zero-divergence record is committed per round
   * (BUILDLOG + FUZZ_r<N>.json). */
 @graft.SlowFuzz
@@ -70,13 +70,7 @@ class SqlFuzzSpec extends SparkSpec {
   }
 
   test("every generated shape runs on Spark over the sf0.001 fixture") {
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings"))
-      graft.catalog.TableCatalog.load(spark, dir, t).createOrReplaceTempView(t)
-    val failures = SqlFuzz.queries(12L, 200).flatMap { case (name, sql) =>
-      try { spark.sql(sql).collect(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-    }
+    val failures = SqlFuzz.sparkFailures(spark, dir, 12L, 200)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

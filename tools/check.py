@@ -25,7 +25,7 @@ def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
-    # harness-generated extra tables (e.g. graft.FuzzNested's nested
+    # harness-generated extra tables (e.g. `graft.Fuzz nested`'s nested
     # fixture): both engines read the same parquet bytes. Validate the
     # basename before interpolating it into SQL — a stray non-identifier
     # dir would otherwise break the whole run with a parse error.
