@@ -1,7 +1,8 @@
 package graft.mutate
 
+import graft.operators.LocalCheckpoints
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Mutation-write semantics on parquet tables (reference K5 + converters
@@ -20,12 +21,20 @@ import org.apache.spark.sql.functions._
   *  - DELETE            remove rows matching (ordered) key fields; null
   *                      key → failed row (`:118-147`)
   *
-  * Scale design: the merge itself is one shuffle join on the key fields
-  * between the incoming batch and the current table — the exact plan a
-  * `MERGE INTO` produces on a format without transaction logs. The swap
-  * is write-to-staging + directory rename, so readers never observe a
-  * partial table. On a real deployment this object is the seam where a
-  * Delta/Iceberg `MERGE` slots in; semantics above are the contract.
+  * Scale design: the batch is evaluated once. It is materialized with
+  * an eager `localCheckpoint`, the failed rows and the merge both read
+  * that copy, and its blocks are dropped when the write returns. REPLACE
+  * and INSERT_OR_UPDATE then merge with one `FULL OUTER JOIN` on the key
+  * fields between the batch and the current table, the plan a `MERGE
+  * INTO` produces on a format without transaction logs; a presence flag
+  * on the batch side tells a matched or new key from an untouched one, so
+  * a NULL batch value still overwrites. INSERT and UPDATE split the batch
+  * with a semi and an anti join against the table's key columns alone.
+  * The table is assumed unique on its keys, which every op here
+  * preserves. The swap is write-to-staging + directory rename, so readers
+  * never observe a partial table. On a real deployment this object is the
+  * seam where a Delta/Iceberg `MERGE` slots in; semantics above are the
+  * contract.
   */
 object UpsertWriter {
 
@@ -88,80 +97,87 @@ object UpsertWriter {
     require(keyFields.nonEmpty, "keyFields required")
     val keyCols = keyFields.map(col)
 
-    // Null keys are rejected up front (StructToMutationConverter.java:128-131).
-    val nullKey = keyFields.map(col(_).isNull).reduce(_ || _)
-    val bad = batch.filter(nullKey)
-    val good = batch.filter(!nullKey)
-      .dropDuplicates(keyFields) // last-write-wins is undefined in-batch; dedup for determinism
+    // The batch is evaluated once: every branch below reads this copy.
+    // Its blocks are dropped when the write returns; `failed` is a
+    // checkpoint of its own, so it stays readable after that.
+    val (rows, blocks) = LocalCheckpoints.tracked(batch)
+    try {
+      // Null keys are rejected up front (StructToMutationConverter.java:128-131).
+      val nullKey = keyFields.map(col(_).isNull).reduce(_ || _)
+      val bad = rows.filter(nullKey)
+      val good = rows.filter(!nullKey)
+        .dropDuplicates(keyFields) // last-write-wins is undefined in-batch; dedup for determinism
 
-    val current = readTable(spark, path)
+      // Failed rows are materialized (localCheckpoint) BEFORE the swap:
+      // their plans read the pre-swap table files, which the swap deletes.
+      def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-    // Failed rows are materialized (localCheckpoint) BEFORE the swap:
-    // their plans read the pre-swap table files, which the swap deletes.
-    def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
+      (op, readTable(spark, path)) match {
+        case (Delete, None) => Result(path, 0L, pin(bad))
+        case (Update, None) => Result(path, 0L, pin(rows))
+        case (_, None) => Result(path, swap(spark, path, good), pin(bad))
 
-    op match {
-      case Delete =>
-        current match {
-          case None => Result(path, 0L, pin(bad))
-          case Some(cur) =>
-            val failed = pin(bad)
-            val next = cur.join(good.select(keyCols: _*), keyFields, "left_anti")
-            Result(path, swap(spark, path, next), failed)
-        }
+        case (Delete, Some(cur)) =>
+          val failed = pin(bad)
+          val next = cur.join(good.select(keyCols: _*), keyFields, "left_anti")
+          Result(path, swap(spark, path, next), failed)
 
-      case Replace | InsertOrUpdate =>
-        current match {
-          case None =>
-            Result(path, swap(spark, path, good), pin(bad))
-          case Some(cur) =>
-            val failed = pin(bad)
-            val aligned = align(good, cur, op == InsertOrUpdate, keyFields)
-            val kept = cur.join(good.select(keyCols: _*), keyFields, "left_anti")
-            Result(path, swap(spark, path, kept.unionByName(aligned)), failed)
-        }
+        case (Insert, Some(cur)) =>
+          val exists = good.join(cur.select(keyCols: _*), keyFields, "left_semi")
+          val fresh = good.join(cur.select(keyCols: _*), keyFields, "left_anti")
+          val failed = pin(bad.unionByName(exists, allowMissingColumns = true))
+          val next = cur.unionByName(alignSchema(fresh, cur), allowMissingColumns = true)
+          Result(path, swap(spark, path, next), failed)
 
-      case Insert =>
-        current match {
-          case None => Result(path, swap(spark, path, good), pin(bad))
-          case Some(cur) =>
-            val exists = good.join(cur.select(keyCols: _*), keyFields, "left_semi")
-            val fresh = good.join(cur.select(keyCols: _*), keyFields, "left_anti")
-            val failed = pin(bad.unionByName(exists, allowMissingColumns = true))
-            val next = cur.unionByName(alignSchema(fresh, cur), allowMissingColumns = true)
-            Result(path, swap(spark, path, next), failed)
-        }
+        case (Update, Some(cur)) =>
+          val hit = good.join(cur.select(keyCols: _*), keyFields, "left_semi")
+          val miss = good.join(cur.select(keyCols: _*), keyFields, "left_anti")
+          val failed = pin(bad.unionByName(miss, allowMissingColumns = true))
+          val merged = nextState(hit.as("b").join(cur.as("c"), keyFields, "left_outer"),
+            hit, cur, keyFields, lit(true), keepMissing = true)
+          val kept = cur.join(hit.select(keyCols: _*), keyFields, "left_anti")
+          Result(path, swap(spark, path, kept.unionByName(merged)), failed)
 
-      case Update =>
-        current match {
-          case None => Result(path, 0L, pin(batch))
-          case Some(cur) =>
-            val hit = good.join(cur.select(keyCols: _*), keyFields, "left_semi")
-            val miss = good.join(cur.select(keyCols: _*), keyFields, "left_anti")
-            val failed = pin(bad.unionByName(miss, allowMissingColumns = true))
-            val merged = align(hit, cur, merge = true, keyFields)
-            val kept = cur.join(hit.select(keyCols: _*), keyFields, "left_anti")
-            Result(path, swap(spark, path, kept.unionByName(merged)), failed)
-        }
-    }
+        case (_, Some(cur)) => // REPLACE, INSERT_OR_UPDATE
+          val failed = pin(bad)
+          val joined = good.withColumn(InBatch, lit(true)).as("b")
+            .join(cur.as("c"), keyFields, "full_outer")
+          val next = nextState(joined, good, cur, keyFields, col(InBatch).isNotNull,
+            keepMissing = op == InsertOrUpdate)
+          Result(path, swap(spark, path, next), failed)
+      }
+    } finally LocalCheckpoints.release(blocks)
   }
 
-  /** Project `batch` onto `cur`'s schema. With `merge=true`
-    * (INSERT_OR_UPDATE / UPDATE) columns absent from the batch take the
-    * CURRENT row's values; otherwise (REPLACE) they become null. */
-  private def align(batch: DataFrame, cur: DataFrame, merge: Boolean,
-                    keyFields: Seq[String]): DataFrame = {
-    val batchCols = batch.columns.toSet
-    if (!merge) alignSchema(batch, cur)
-    else {
-      val joined = batch.as("b").join(cur.as("c"), keyFields, "left_outer")
-      val cols = cur.schema.fields.toIndexedSeq.map { f =>
-        if (keyFields.contains(f.name)) col(f.name)
-        else if (batchCols.contains(f.name)) col(s"b.${f.name}").cast(f.dataType).as(f.name)
-        else col(s"c.${f.name}").as(f.name)
-      }
-      joined.select(cols: _*)
+  // Marks the batch side of the merge join. A batch value may be NULL on
+  // purpose and must still overwrite, so presence cannot be read off the
+  // data columns.
+  private val InBatch = "__in_batch"
+
+  /** A join of the batch (alias `b`) with the table (alias `c`) on the
+    * key fields, projected onto the table's schema. Where `batchWins`, a
+    * column the batch has takes the batch value cast to the table's type,
+    * and a column it lacks keeps the current value (`keepMissing`:
+    * INSERT_OR_UPDATE, UPDATE) or becomes NULL (REPLACE). Every other row
+    * keeps its current values. Batch columns the table lacks are dropped.
+    * Keys are cast to the table's type under REPLACE only; the merge ops
+    * keep the common type of both sides, so a wider batch key widens the
+    * table's key column instead of failing the cast. */
+  private def nextState(joined: DataFrame, good: DataFrame, cur: DataFrame,
+                        keyFields: Seq[String], batchWins: Column,
+                        keepMissing: Boolean): DataFrame = {
+    val batchCols = good.columns.toSet
+    val cols = cur.schema.fields.toIndexedSeq.map { f =>
+      val current = col(s"c.${f.name}")
+      val v =
+        if (keyFields.contains(f.name)) if (keepMissing) col(f.name) else col(f.name).cast(f.dataType)
+        else if (batchCols.contains(f.name))
+          when(batchWins, col(s"b.${f.name}").cast(f.dataType)).otherwise(current)
+        else if (keepMissing) current
+        else when(batchWins, lit(null).cast(f.dataType)).otherwise(current)
+      v.as(f.name)
     }
+    joined.select(cols: _*)
   }
 
   /** Cast/pad `batch` to `cur`'s schema (missing → null). */

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Deterministic block release for keyed-rounds algorithms that
   * `localCheckpoint` every round (ConnectedComponents, the distributed
-  * BPE trainer): `Dataset.unpersist` is a NO-OP for a checkpointed frame
+  * BPE trainer) and for `mutate.UpsertWriter`'s once-per-write copy of
+  * its batch: `Dataset.unpersist` is a NO-OP for a checkpointed frame
   * — localCheckpoint persists its RDD outside the CacheManager, so the
   * blocks otherwise free only on GC + ContextCleaner. Over many rounds
   * that is unbounded block-manager pressure the code merely believes it
@@ -27,7 +28,7 @@ import org.apache.spark.sql.DataFrame
   * attributed the cache to the round's blocks, and releasing round 1
   * silently destroyed the upstream cache, recomputing the whole edge
   * pipeline every later round. */
-private[operators] object LocalCheckpoints {
+private[graft] object LocalCheckpoints {
 
   def tracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
     val out = df.localCheckpoint() // eager: materialized on return

@@ -93,9 +93,9 @@ object Templates {
     val df = SqlRunner.run(spark, c.query, c.params)
     val res = UpsertWriter.write(df, c.outputTable, UpsertWriter.Op.parse(c.mutationOp), c.keyFields)
     // K7 error branch + K9 failed-count notify (BigQueryToSpanner.java:126-145).
-    // res.failed is localCheckpoint'ed by UpsertWriter; count it ONCE and
-    // reuse for both branches (the earlier isEmpty + write + count ran
-    // three jobs against the failed branch).
+    // res.failed is its own localCheckpoint, which outlives UpsertWriter's
+    // copy of the batch; count it ONCE and reuse for both branches (the
+    // earlier isEmpty + write + count ran three jobs against it).
     if (c.outputError.isDefined || c.outputNotify.isDefined) {
       val nFailed = res.failed.count()
       c.outputError.foreach { p =>

@@ -19,11 +19,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         "VERDICT item 2.")
     s
   }
+  /** A fresh temp directory, deleted with everything in it once the
+    * suite has run. */
   def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$name").toFile
-    d.deleteOnExit()
+    tmpDirs.synchronized(tmpDirs += d)
     d.getAbsolutePath
   }
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  override def afterAll(): Unit =
+    try tmpDirs.synchronized(tmpDirs.foreach(graft.catalog.TestDirs.rmTree))
+    finally super.afterAll()
 }
 
 object SparkSpec {

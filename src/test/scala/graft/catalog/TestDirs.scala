@@ -1,9 +1,10 @@
 package graft.catalog
 
-/** Shared temp-fixture-dir helper for specs that materialize a derived
-  * fixture (SkewFixtureSpec, NullGenSpec): one recursive-delete
-  * implementation, registered once per created dir at JVM exit. */
-private[catalog] object TestDirs {
+/** Temp-directory helpers for the test source set: the one recursive
+  * delete (`SparkSpec.tmpDir`, the stream surface's checkpoint-kill
+  * round) and a directory removed at JVM exit for specs that materialize
+  * a derived fixture (SkewFixtureSpec, NullGenSpec). */
+private[graft] object TestDirs {
 
   def rmTree(f: java.io.File): Unit = if (f.exists) {
     val kids = f.listFiles

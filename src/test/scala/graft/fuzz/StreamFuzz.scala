@@ -618,10 +618,11 @@ object StreamFuzz extends Surface {
     val (s, ss, gap) = in
     runOne(spark, s) ++ runSessions(spark, ss, gap) ++
       runIntervalJoin(spark, r) ++
-      (if (i % 4 == 0)
-        runRestart(spark, s, java.nio.file.Files.createTempDirectory("stfuzz").toString,
-          killAfter = 1 + r.nextInt(3))
-      else Nil)
+      (if (i % 4 == 0) {
+        val dir = java.nio.file.Files.createTempDirectory("stfuzz").toFile
+        try runRestart(spark, s, dir.toString, killAfter = 1 + r.nextInt(3))
+        finally graft.catalog.TestDirs.rmTree(dir)
+      } else Nil)
   }
   def repro(spark: SparkSession, in: In, i: Int): String =
     "schedule: " + in._1.batches.map(_.mkString(",")).mkString(" || ")
