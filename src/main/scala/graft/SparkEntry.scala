@@ -1,13 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.queries.QuerySpec
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query surface the harnesses run (Verify, Bench, PlanAudit,
+  * ExplainDump, Profile, perfbench).
   *
-  * `queries` is the SURVEY §2 operator inventory as runnable entries;
-  * `oracleSql` holds the DuckDB-equivalent SQL for the hash-match gate.
-  * Query groups live under graft.queries.*; this object only aggregates.
+  * `specs` is the one query registry: the SURVEY §2 operator inventory
+  * as `QuerySpec` entries, each pairing a runnable build with the
+  * DuckDB-equivalent SQL for the hash-match gate. Query groups live
+  * under graft.queries.*; this object only concatenates them, rejects a
+  * name written twice, and derives the two maps the harnesses read.
   */
 object SparkEntry {
 
@@ -15,8 +18,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_revenue_by_nation")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2, plus the
-    * training-data pipeline suite (dedup / similarity / text analysis).
+  /** Fails when a name appears more than once, within one module or
+    * across modules: a map built from such a list would keep only one of
+    * the entries. */
+  def requireDistinct(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val dupes = specs.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
+    require(dupes.isEmpty, s"query names defined twice: ${dupes.toSeq.sorted.mkString(", ")}")
+    specs
+  }
+
+  /** Every gate query: one entry per implemented operator from SURVEY.md
+    * §2, plus the training-data pipeline suite (dedup / similarity /
+    * text analysis).
     *
     * Execution contract: the harnesses (Verify, Bench, the driver) run
     * these one at a time. The stored-model gates (a_ann_*_stored,
@@ -24,23 +37,20 @@ object SparkEntry {
     * dir under per-query-unique artifact names, so even concurrent
     * invocation cannot cross-clobber — but the SEQUENTIAL contract is
     * the tested one. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-      graft.queries.PipelineQueries.queries ++
-      graft.queries.ParityQueries.queries ++
-      graft.queries.MediaQueries.queries ++
-      graft.queries.SinkQueries.queries ++
-      graft.queries.AnalyticsQueries.queries ++
-      graft.queries.StatQueries.queries
+  val specs: Seq[QuerySpec] = requireDistinct(
+    graft.queries.CoreQueries.specs ++
+      graft.queries.PipelineQueries.specs ++
+      graft.queries.ParityQueries.specs ++
+      graft.queries.MediaQueries.specs ++
+      graft.queries.SinkQueries.specs ++
+      graft.queries.AnalyticsQueries.specs ++
+      graft.queries.StatQueries.specs)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracleSql ++
-      graft.queries.PipelineQueries.oracleSql ++
-      graft.queries.ParityQueries.oracleSql ++
-      graft.queries.MediaQueries.oracleSql ++
-      graft.queries.SinkQueries.oracleSql ++
-      graft.queries.AnalyticsQueries.oracleSql ++
-      graft.queries.StatQueries.oracleSql
+  /** Name → build, derived from `specs`. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+
+  /** Name → DuckDB oracle SQL, derived from `specs`; each statement runs
+    * standalone against the same parquet tables. */
+  val oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
 }

@@ -72,14 +72,4 @@ object Layout {
       s"key width ${2 * bits} must be in (0, 62]")
     GraftFunctions.hilbertKey(xCol.cast("long"), yCol.cast("long"), bits)
   }
-
-  /** Physically cluster `df` along the Hilbert curve of (xCol, yCol) —
-    * same one-range-shuffle cost as [[zOrderCluster]], tighter boxes. */
-  def hilbertCluster(df: DataFrame, xCol: Column, yCol: Column,
-                     bits: Int = 16, numRanges: Int = 0): DataFrame = {
-    val key = hilbertKey(xCol, yCol, bits)
-    val ranges = if (numRanges > 0) numRanges
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    df.repartitionByRange(ranges, key).sortWithinPartitions(key)
-  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Parquet-backed persistence for trained models — the seam between
   * TRAIN-time and SERVE-time that the inline-training queries lack. At
   * 100 TB, retraining the quantizer inside every retrieval query is the
-  * dominant waste (the k-means/PQ/SQ/BPE models are corpus-scans to
+  * dominant waste (the k-means/PQ/BPE models are corpus-scans to
   * build but kilobytes to store); persisting them also de-noises evals,
   * since every consumer provably serves the SAME model bytes.
   *
@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions._
   * Schemas:
   *  - centroids (k-means / IVF coarse quantizer): (cid LONG, cv ARRAY<FLOAT>)
   *  - PQ codebooks: (subspace INT, cid LONG, cv ARRAY<FLOAT>)
-  *  - SQ scalar quantizer: (dim INT, mn FLOAT, mx FLOAT)
   *  - BPE merge table: (rk LONG, lhs STRING, rhs STRING, cnt LONG)
   */
 object ModelStore {
@@ -81,23 +80,6 @@ object ModelStore {
       .as[(Int, Long, Array[Float])].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(r => (r._2, r._3)).toSeq)
-  }
-
-  // ---- SQ8 scalar quantizer (per-dimension min/max) ----
-
-  def saveSqModel(spark: SparkSession, model: Seq[(Float, Float)],
-                  dir: String, name: String): Unit = {
-    import spark.implicits._
-    save(model.zipWithIndex.map { case ((mn, mx), d) => (d, mn, mx) }
-      .toDF("dim", "mn", "mx"), dir, name)
-  }
-
-  def loadSqModel(spark: SparkSession, dir: String, name: String)
-      : Seq[(Float, Float)] = {
-    import spark.implicits._
-    load(spark, dir, name).select(col("dim"), col("mn"), col("mx"))
-      .as[(Int, Float, Float)].collect().sortBy(_._1)
-      .map(r => (r._2, r._3)).toSeq
   }
 
   // ---- BPE merge table (bpeTrain/bpeTrainDistributed output, as-is) ----

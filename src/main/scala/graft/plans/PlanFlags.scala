@@ -29,6 +29,11 @@ package graft.plans
   *    reverses by itself at real scale and would drown the lint in
   *    false positives (measured: 53 physical flags vs the handful of
   *    real hint-pinned ones).
+  *
+  * [[normalize]] strips what differs between two plannings of the same
+  * code, and [[startExprIds]] fixes the expression ids a query plans
+  * from, so PlanAudit's `plan_md5` and ExplainDump's text diff cleanly
+  * between runs and checkouts.
   */
 object PlanFlags {
   def bnlj(plan: String): Boolean = plan.contains("BroadcastNestedLoopJoin")
@@ -101,5 +106,44 @@ object PlanFlags {
         }
       }
     }
+  }
+
+  /** A plan's text without what varies between two runs of the same
+    * code: expression and plan ids, adaptive query-stage and codegen
+    * stage numbers (assigned in the order stages materialize), lambda
+    * variable suffixes, JVM lambda class names, identity hash codes, RDD
+    * ids and the source lines of checkpointed RDDs, temp-directory
+    * suffixes and the checkout path. */
+  def normalize(plan: String, checkout: String = sys.props("user.dir")): String =
+    plan.replace(checkout, "<checkout>")
+      .replaceAll("#\\d+", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("(QueryStage |codegen id : |\\*\\()\\d+", "$1")
+      .replaceAll("(lambda \\w+?)_\\d+#", "$1#")
+      .replaceAll("\\$Lambda\\$?\\d*/0x[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+      .replaceAll("(\\.scala):\\d+", "$1")
+      .replaceAll("(/tmp/[A-Za-z_]+?)\\d{8,}", "$1")
+
+  /** Spark orders some rewrites by the hash of expression ids (the
+    * distinct groups of RewriteDistinctAggregates, as in
+    * `q_table_stats`), and the ids come from one JVM-wide counter that
+    * earlier queries, AQE re-planning among them, advance by a varying
+    * amount. Planning the query at sorted registry position `i` from the
+    * fixed id `(i + 1) << 24`, above every id already handed out, keeps
+    * those orders, and so its normalized plan text, the same between
+    * runs. */
+  def startExprIds(i: Int): Unit = {
+    val base = (i + 1L) << 24
+    require(exprIds.get < base, s"expression ids passed $base; widen the per-query id range")
+    exprIds.set(base)
+  }
+
+  private lazy val exprIds = {
+    val f = org.apache.spark.sql.catalyst.expressions.NamedExpression.getClass
+      .getDeclaredField("curId")
+    f.setAccessible(true)
+    f.get(null).asInstanceOf[java.util.concurrent.atomic.AtomicLong]
   }
 }

@@ -21,6 +21,8 @@ import graft.operators.Multimodal
   */
 object MediaQueries {
 
+  import OracleText.cosD
+
   /** documents → (media_id, bytes, bmp): the shared real-media source. */
   private def bmpMedia(s: SparkSession, dir: String): DataFrame =
     Multimodal.encodeBmp(
@@ -29,13 +31,37 @@ object MediaQueries {
           col("text").cast("binary").as("bytes")),
       width = 4)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Banded channel-mean feature CTEs shared by the real-decode oracles:
+    * the BMP layout is payload byte (p-1) → image row (p-1)/12, channel
+    * (p-1)%3; band = row*4/h; per-(band, channel) count = 4 bytes per
+    * row over ALL h rows (zero pixel padding included, exactly as the
+    * decoder sees it). */
+  private val featureCtes: String =
+    """d AS (SELECT doc_id AS media_id, text, strlen(text) AS len,
+      |       -- ::INT inside AND out: DuckDB's greatest() promotes to BIGINT
+      |       greatest(1, CAST(ceil(strlen(text) / 12.0) AS INT))::INT AS h
+      |     FROM documents),
+      |bybyte AS (SELECT media_id, h, (((p - 1) // 12) * 4) // h AS band,
+      |        (p - 1) % 3 AS ch, ord(substring(text, p, 1)) AS v
+      |      FROM d, unnest(range(1, len + 1)) AS u(p)),
+      |bs AS (SELECT media_id, band, ch, sum(v) AS s
+      |       FROM bybyte GROUP BY media_id, band, ch),
+      |rc AS (SELECT media_id, (r * 4) // h AS band, 4 * count(*) AS cnt
+      |       FROM d, unnest(range(0, h)) AS u(r)
+      |       GROUP BY media_id, (r * 4) // h),
+      |f AS (SELECT rc.media_id, rc.band, c.ch,
+      |        round(CAST(coalesce(bs.s, 0) AS DOUBLE) / rc.cnt, 6) AS fv
+      |      FROM rc CROSS JOIN (SELECT unnest(range(0, 3)) AS ch) c
+      |      LEFT JOIN bs ON bs.media_id = rc.media_id
+      |        AND bs.band = rc.band AND bs.ch = c.ch)""".stripMargin
+
+  val specs: Seq[QuerySpec] = Seq(
 
     // quarantine path: every 13th payload gets its magic byte corrupted;
     // the lenient decoder must CLASSIFY those rows (stable reason code,
     // null decode columns) and decode the rest — one corrupt file can
     // never kill a 100 TB scan, it lands in a quarantine partition
-    "m_media_quarantine" -> ((s, dir) => {
+    QuerySpec("m_media_quarantine", (s, dir) => {
       val corrupted = bmpMedia(s, dir).withColumn("bmp",
         when(col("media_id") % 13 === 0,
           concat(lit(Array('X'.toByte)),
@@ -46,12 +72,19 @@ object MediaQueries {
           col("img_w").cast("long").as("img_w"),
           col("img_h").cast("long").as("img_h"))
         .orderBy("media_id")
-    }),
+    },
+      """SELECT doc_id AS media_id,
+        |  CASE WHEN doc_id % 13 = 0 THEN 'not a BMP payload' ELSE 'ok' END AS bmp_status,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 4 END::BIGINT AS img_w,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL
+        |       ELSE greatest(1, CAST(ceil(strlen(text) / 12.0) AS BIGINT))
+        |  END::BIGINT AS img_h
+        |FROM documents ORDER BY media_id""".stripMargin),
 
     // the audio quarantine twin: corrupt every 13th RIFF magic; the
     // lenient WAV decoder classifies those rows (stable reason code,
     // null decode columns) and decodes the rest
-    "m_media_quarantine_wav" -> ((s, dir) => {
+    QuerySpec("m_media_quarantine_wav", (s, dir) => {
       val media = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id").as("media_id"),
           col("text").cast("binary").as("bytes"))
@@ -65,11 +98,16 @@ object MediaQueries {
           col("sample_rate").cast("long").as("sample_rate"),
           col("n_samples"))
         .orderBy("media_id")
-    }),
+    },
+      """SELECT doc_id AS media_id,
+        |  CASE WHEN doc_id % 13 = 0 THEN 'not a RIFF/WAVE payload' ELSE 'ok' END AS wav_status,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 8000 END::BIGINT AS sample_rate,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE strlen(text) END::BIGINT AS n_samples
+        |FROM documents ORDER BY media_id""".stripMargin),
 
     // the video quarantine twin: same contract over the nested-LIST AVI
     // walk — magic damage classifies, valid frames decode
-    "m_media_quarantine_avi" -> ((s, dir) => {
+    QuerySpec("m_media_quarantine_avi", (s, dir) => {
       val media = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id").as("media_id"),
           col("text").cast("binary").as("bytes"))
@@ -84,21 +122,32 @@ object MediaQueries {
           col("frame_w").cast("long").as("frame_w"),
           col("frame_h").cast("long").as("frame_h"))
         .orderBy("media_id")
-    }),
+    },
+      """SELECT doc_id AS media_id,
+        |  CASE WHEN doc_id % 13 = 0 THEN 'not a RIFF/AVI payload' ELSE 'ok' END AS avi_status,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL
+        |       ELSE greatest(1, CAST(ceil(strlen(text) / 48.0) AS BIGINT)) END::BIGINT AS n_frames,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 4 END::BIGINT AS frame_w,
+        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 4 END::BIGINT AS frame_h
+        |FROM documents ORDER BY media_id""".stripMargin),
 
     // payload stats (expressions) + decoded image dimensions (REAL BMP
     // header parse) — the media-catalog row a curation run starts from
-    "m_media_stats" -> ((s, dir) => {
+    QuerySpec("m_media_stats", (s, dir) => {
       Multimodal.decodeBmp(Multimodal.withContentStats(bmpMedia(s, dir)))
         .select("media_id", "n_bytes", "content_sha", "img_w", "img_h")
         .orderBy("media_id")
-    }),
+    },
+      """SELECT doc_id AS media_id, strlen(text)::BIGINT AS n_bytes,
+        |  sha256(text) AS content_sha, 4 AS img_w,
+        |  greatest(1, CAST(ceil(strlen(text) / 12.0) AS INT))::INT AS img_h
+        |FROM documents ORDER BY media_id""".stripMargin),
 
     // binary-payload exact dedup: Dedup.exactDedup works unchanged on a
     // binary column (md5 accepts binary), so media dedup is the same
     // one-hash-shuffle operator as text dedup. Duplicates are planted
     // (an id-shifted copy of every payload) since the corpus has none.
-    "m_media_dedup" -> ((s, dir) => {
+    QuerySpec("m_media_dedup", (s, dir) => {
       val media = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id").as("media_id"), col("text").cast("binary").as("bytes"))
       val copies = media.select((col("media_id") + 1000000L).as("media_id"),
@@ -106,14 +155,21 @@ object MediaQueries {
       graft.operators.Dedup.exactDedup(
           media.unionByName(copies), "media_id", "bytes")
         .orderBy("media_id")
-    }),
+    },
+      """WITH m AS (
+        |  SELECT doc_id AS media_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text FROM documents)
+        |SELECT min(media_id) AS media_id, md5(text) AS content_hash,
+        |  CAST(count(*) AS BIGINT) AS n_copies
+        |FROM m GROUP BY md5(text) ORDER BY media_id""".stripMargin),
 
     // multimodal → similarity composition: REAL BMP decode → banded
     // channel-mean feature vectors (4 bands × 3 channels) → ANN top-k.
     // The features are integer pixel sums / counts rounded at 6 dp, so
     // DuckDB replicates them exactly and the composition is fully
     // hash-checked end to end.
-    "m_media_ann" -> ((s, dir) => {
+    QuerySpec("m_media_ann", (s, dir) => {
       val feats = Multimodal.decodeBmp(bmpMedia(s, dir), bands = 4)
         .select(col("media_id"),
           Multimodal.bandMeanFeatures(col("band_sums"), col("band_counts"))
@@ -123,7 +179,23 @@ object MediaQueries {
           "media_id", "features", k = 3)
         .select("qid", "nid", "cos", "rk")
         .orderBy("qid", "rk")
-    }),
+    },
+      {
+        val cos = "round(list_dot_product(a.v::DOUBLE[], b.v::DOUBLE[]) / " +
+          "(sqrt(list_dot_product(a.v::DOUBLE[], a.v::DOUBLE[])) * " +
+          "sqrt(list_dot_product(b.v::DOUBLE[], b.v::DOUBLE[]))), 6)"
+        s"""WITH $featureCtes,
+           |fl AS (SELECT media_id, list(CAST(fv AS FLOAT) ORDER BY band, ch) AS v
+           |       FROM f GROUP BY media_id),
+           |${OracleSamples.sampleCte("mqs", "fl", "media_id")},
+           |sc AS (SELECT a.media_id AS qid, b.media_id AS nid, $cos AS cos
+           |       FROM fl a JOIN fl b ON b.media_id <> a.media_id
+           |       WHERE a.media_id IN (SELECT media_id FROM mqs))
+           |SELECT qid, nid, cos, CAST(rk AS BIGINT) AS rk FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rk
+           |  FROM sc)
+           |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
+      }),
 
     // full near-dup composition for media: REAL BMP decode → trained
     // k-means quantizer → SemDeDup. Exact copies (planted, id-shifted)
@@ -131,7 +203,7 @@ object MediaQueries {
     // the higher id drops at tau = 0.99 — the whole image-dedup pipeline
     // shape, hash-checked end to end because the band-mean features are
     // integer arithmetic over the payload bytes.
-    "m_media_semantic_dedup" -> ((s, dir) => {
+    QuerySpec("m_media_semantic_dedup", (s, dir) => {
       // Pinned k=4 SemDeDup (oracle-value pin; the scale-safe auto-k twin
       // is m_media_semantic_dedup_auto). Because the pin makes per-cluster
       // pair volume O(N²/4), the GATE runs on the 5000 hash-minimal docs
@@ -179,12 +251,54 @@ object MediaQueries {
           s"bound ($driverBound): the 5000-row slice invariant broke")
       feats.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), deduped.schema)
-    }),
+    },
+      {
+        // band-mean features over originals + planted id-shifted copies
+        // (identical bytes -> identical vectors), then the d_semantic_dedup
+        // kmeans/drop logic over them
+        s"""WITH $featureCtes,
+           |fl0 AS (SELECT media_id, list(CAST(fv AS FLOAT) ORDER BY band, ch) AS v
+           |       FROM f GROUP BY media_id),
+           |-- content-hash fixed-count corpus slice, lockstep with the Spark
+           |-- gate (5000 hash-minimal ids = the full table at gate SFs)
+           |${OracleSamples.sliceCte("fl", "fl0", "media_id", 5000)},
+           |fm AS (SELECT media_id, v FROM fl
+           |       UNION ALL
+           |       SELECT media_id + 1000000, v FROM fl),
+           |c0 AS (SELECT media_id AS cid, v AS cv FROM fm ORDER BY media_id LIMIT 4),
+           |a1 AS (SELECT media_id, cid FROM (
+           |  SELECT e.media_id, c.cid,
+           |    row_number() OVER (PARTITION BY e.media_id ORDER BY ${cosD("e.v", "c.cv")} DESC, c.cid) AS rk
+           |  FROM fm e CROSS JOIN c0 c) WHERE rk = 1),
+           |m1 AS (SELECT a1.cid, dm.dim,
+           |         CAST(sum(CAST(CAST(e.v[dm.dim] AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
+           |           / count(*) AS mv
+           |       FROM a1 JOIN fm e USING (media_id),
+           |            unnest(range(1, len(e.v) + 1)) AS dm(dim)
+           |       GROUP BY a1.cid, dm.dim),
+           |c1 AS (SELECT c0.cid,
+           |         CASE WHEN count(m1.mv) = 0 THEN any_value(c0.cv)
+           |              ELSE list(CAST(m1.mv AS FLOAT) ORDER BY m1.dim) END AS cv
+           |       FROM c0 LEFT JOIN m1 ON m1.cid = c0.cid
+           |       GROUP BY c0.cid),
+           |assign AS (SELECT media_id, cid FROM (
+           |  SELECT e.media_id, c.cid,
+           |    row_number() OVER (PARTITION BY e.media_id ORDER BY ${cosD("e.v", "c.cv")} DESC, c.cid) AS crk
+           |  FROM fm e CROSS JOIN c1 c) WHERE crk = 1),
+           |dropped AS (SELECT DISTINCT b.media_id
+           |  FROM assign a JOIN assign b ON a.cid = b.cid AND a.media_id < b.media_id
+           |  JOIN fm x ON x.media_id = a.media_id
+           |  JOIN fm y ON y.media_id = b.media_id
+           |  WHERE ${cosD("x.v", "y.v")} >= 0.99)
+           |SELECT a.media_id, a.cid AS cluster_id, dr.media_id IS NULL AS kept
+           |FROM assign a LEFT JOIN dropped dr USING (media_id)
+           |ORDER BY a.media_id""".stripMargin
+      }),
 
     // the audio flavor: payload → real RIFF/WAVE container → real chunk-
     // walking decode → per-segment RMS loudness profile (the
     // silence-trim / loudness-filter shape of an audio curation pass)
-    "m_media_wav" -> ((s, dir) => {
+    QuerySpec("m_media_wav", (s, dir) => {
       val media = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id").as("media_id"),
           col("text").cast("binary").as("bytes"))
@@ -196,12 +310,32 @@ object MediaQueries {
       decoded.select(Seq(col("media_id"), col("sample_rate"),
           col("n_samples")) ++ rms: _*)
         .orderBy("media_id")
-    }),
+    },
+      // 8-bit PCM: sample value = text byte, amplitude = value - 128;
+      // segment of (1-based) sample p = ((p-1) * 4) // n
+      {
+        val rmsCols = (0 until 4).map { i =>
+          s"coalesce(max(CASE WHEN seg = $i THEN rms END), 0.0) AS rms$i"
+        }.mkString(",\n  ")
+        s"""WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS n FROM documents),
+           |sq AS (SELECT media_id, ((p - 1) * 4) // n AS seg,
+           |         sum((ord(substring(text, p, 1)) - 128)
+           |           * (ord(substring(text, p, 1)) - 128)) AS ss,
+           |         count(*) AS cnt
+           |       FROM d, unnest(range(1, n + 1)) AS u(p)
+           |       GROUP BY media_id, ((p - 1) * 4) // n),
+           |r AS (SELECT media_id, seg,
+           |        round(sqrt(CAST(ss AS DOUBLE) / cnt), 6) AS rms FROM sq)
+           |SELECT d.media_id, 8000 AS sample_rate, n::BIGINT AS n_samples,
+           |  $rmsCols
+           |FROM d LEFT JOIN r USING (media_id)
+           |GROUP BY d.media_id, n ORDER BY d.media_id""".stripMargin
+      }),
 
     // audio feature extraction beyond RMS: per-segment MEAN-LINE zero
     // crossing counts (voicing/silence screen; integer-exact via the
     // n·amp − S sign test) over the same real WAV round-trip.
-    "m_media_audio" -> ((s, dir) => {
+    QuerySpec("m_media_audio", (s, dir) => {
       val media = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id").as("media_id"),
           col("text").cast("binary").as("bytes"))
@@ -211,14 +345,33 @@ object MediaQueries {
         element_at(col("seg_zcs"), i + 1).as(s"zc$i"))
       decoded.select(Seq(col("media_id"), col("n_samples")) ++ zc: _*)
         .orderBy("media_id")
-    }),
+    },
+      {
+        val amp = "(ord(substring(text, p, 1)) - 128)"
+        val ampPrev = "(ord(substring(text, p - 1, 1)) - 128)"
+        val zcCols = (0 until 4).map { i =>
+          s"coalesce(max(CASE WHEN seg = $i THEN z END), 0)::BIGINT AS zc$i"
+        }.mkString(",\n  ")
+        s"""WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS n FROM documents),
+           |s AS (SELECT media_id, CAST(sum($amp) AS BIGINT) AS amp_sum
+           |      FROM d, unnest(range(1, n + 1)) AS u(p) GROUP BY media_id),
+           |zc AS (SELECT d.media_id, ((p - 1) * 4) // n AS seg,
+           |    CAST(sum(CASE WHEN (n * $amp < amp_sum) <> (n * $ampPrev < amp_sum)
+           |             THEN 1 ELSE 0 END) AS BIGINT) AS z
+           |  FROM d JOIN s USING (media_id), unnest(range(2, n + 1)) AS u(p)
+           |  GROUP BY d.media_id, ((p - 1) * 4) // n)
+           |SELECT d.media_id, n::BIGINT AS n_samples,
+           |  $zcCols
+           |FROM d LEFT JOIN zc USING (media_id)
+           |GROUP BY d.media_id, n ORDER BY d.media_id""".stripMargin
+      }),
 
     // video scene-cut detection over the real AVI decode: per-frame
     // total brightness (integer sum over the frame's band sums), cuts
     // where the inter-frame delta exceeds a fixed integer threshold
     // (48 bytes/frame × avg byte delta 32) — all-integer, so the cut
     // count is bit-reproducible; the frame window is per-media.
-    "m_media_scene_cuts" -> ((s, dir) => {
+    QuerySpec("m_media_scene_cuts", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val media = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id").as("media_id"),
@@ -237,14 +390,29 @@ object MediaQueries {
           sum(when(col("delta") > 1536, 1L).otherwise(0L)).as("n_cuts"),
           coalesce(max(col("delta")), lit(0L)).as("max_delta"))
         .orderBy("media_id")
-    }),
+    },
+      """WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS len,
+        |       greatest(1, CAST(ceil(strlen(text) / 48.0) AS INT))::INT AS nf
+        |     FROM documents),
+        |bybyte AS (SELECT media_id, (p - 1) // 48 AS fidx,
+        |        ord(substring(text, p, 1)) AS v
+        |      FROM d, unnest(range(1, len + 1)) AS u(p)),
+        |sf AS (SELECT media_id, fidx, CAST(sum(v) AS BIGINT) AS s
+        |       FROM bybyte GROUP BY media_id, fidx),
+        |dd AS (SELECT media_id, fidx, s,
+        |       lag(s) OVER (PARTITION BY media_id ORDER BY fidx) AS prev FROM sf)
+        |SELECT d.media_id, nf AS n_frames,
+        |  CAST(sum(CASE WHEN abs(s - prev) > 1536 THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
+        |  CAST(coalesce(max(abs(s - prev)), 0) AS BIGINT) AS max_delta
+        |FROM d JOIN dd USING (media_id)
+        |GROUP BY d.media_id, nf ORDER BY media_id""".stripMargin),
 
     // perceptual average-hash near-dup blocking: bit j = band-channel
     // mean j above the image's overall mean — decided by EXACT integer
     // cross-multiplication (s_j·ctot > stot·c_j), so the 12-bit hash is
     // bit-reproducible on any engine; equal-hash pairs are the blocking
     // candidates (the image-side analogue of LSH banding).
-    "m_media_phash" -> ((s, dir) => {
+    QuerySpec("m_media_phash", (s, dir) => {
       val decoded = Multimodal.decodeBmp(bmpMedia(s, dir))
       val withTot = decoded
         .withColumn("__st", aggregate(col("band_sums"), lit(0L), (a, x) => a + x))
@@ -260,143 +428,7 @@ object MediaQueries {
         .select(col("a.media_id").as("m1"), col("b.media_id").as("m2"),
           col("a.ahash").as("ahash"))
         .orderBy("m1", "m2")
-    }),
-
-    // the video flavor: payload → real RIFF/AVI container (uncompressed
-    // 24-bpp DIB frames in a movi LIST) → real nested-LIST chunk walk →
-    // PER-FRAME banded channel means. Frame f covers payload bytes
-    // [f*48, f*48+48) (width 4 × 4 rows × 3 channels); 2 bands × 3
-    // channels, 8 bytes per slot (zero padding counted, exactly as the
-    // decoder sees the stored frame) — all integer arithmetic, fully
-    // hash-checked.
-    "m_media_video" -> ((s, dir) => {
-      val media = TableCatalog.load(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          col("text").cast("binary").as("bytes"))
-      val decoded = Multimodal.decodeAvi(
-        Multimodal.encodeAvi(media, width = 4, frameRows = 4), bands = 2)
-      val ex = decoded.select(col("media_id"), col("n_frames"),
-        col("frame_counts"), posexplode(col("frame_sums")).as(Seq("fidx", "sums")))
-      val feats = (0 until 6).map(i =>
-        element_at(Multimodal.bandMeanFeatures(col("sums"),
-          element_at(col("frame_counts"), col("fidx") + 1)), i + 1).as(s"f$i"))
-      ex.select(Seq(col("media_id"), col("n_frames"),
-          col("fidx").cast("int").as("fidx")) ++ feats: _*)
-        .orderBy("media_id", "fidx")
-    }),
-
-    // the full pipeline: encode → content stats → REAL decode → frame
-    // sampling, every emitted value DuckDB-replicable (n_bytes is the
-    // BMP file size 54 + 12·h; f0..f11 the banded channel means)
-    "m_media_pipeline" -> ((s, dir) => {
-      val decoded = Multimodal.decodeBmp(
-        Multimodal.withContentStats(bmpMedia(s, dir), bytesCol = "bmp"),
-        bands = 4)
-      val sampled = Multimodal.frameSample(decoded, n = 4, frameLen = 16,
-        bytesCol = "bmp")
-      val feats = (0 until 12).map(i =>
-        element_at(Multimodal.bandMeanFeatures(
-          col("band_sums"), col("band_counts")), i + 1).as(s"f$i"))
-      sampled.select(Seq(col("media_id"), col("n_bytes"), col("img_w"),
-          col("img_h")) ++ feats :+ size(col("frames")).as("n_frames"): _*)
-        .orderBy("media_id")
-    })
-  )
-
-  /** Banded channel-mean feature CTEs shared by the real-decode oracles:
-    * the BMP layout is payload byte (p-1) → image row (p-1)/12, channel
-    * (p-1)%3; band = row*4/h; per-(band, channel) count = 4 bytes per
-    * row over ALL h rows (zero pixel padding included, exactly as the
-    * decoder sees it). */
-  private val featureCtes: String =
-    """d AS (SELECT doc_id AS media_id, text, strlen(text) AS len,
-      |       -- ::INT inside AND out: DuckDB's greatest() promotes to BIGINT
-      |       greatest(1, CAST(ceil(strlen(text) / 12.0) AS INT))::INT AS h
-      |     FROM documents),
-      |bybyte AS (SELECT media_id, h, (((p - 1) // 12) * 4) // h AS band,
-      |        (p - 1) % 3 AS ch, ord(substring(text, p, 1)) AS v
-      |      FROM d, unnest(range(1, len + 1)) AS u(p)),
-      |bs AS (SELECT media_id, band, ch, sum(v) AS s
-      |       FROM bybyte GROUP BY media_id, band, ch),
-      |rc AS (SELECT media_id, (r * 4) // h AS band, 4 * count(*) AS cnt
-      |       FROM d, unnest(range(0, h)) AS u(r)
-      |       GROUP BY media_id, (r * 4) // h),
-      |f AS (SELECT rc.media_id, rc.band, c.ch,
-      |        round(CAST(coalesce(bs.s, 0) AS DOUBLE) / rc.cnt, 6) AS fv
-      |      FROM rc CROSS JOIN (SELECT unnest(range(0, 3)) AS ch) c
-      |      LEFT JOIN bs ON bs.media_id = rc.media_id
-      |        AND bs.band = rc.band AND bs.ch = c.ch)""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    "m_media_quarantine" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 13 = 0 THEN 'not a BMP payload' ELSE 'ok' END AS bmp_status,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 4 END::BIGINT AS img_w,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL
-        |       ELSE greatest(1, CAST(ceil(strlen(text) / 12.0) AS BIGINT))
-        |  END::BIGINT AS img_h
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "m_media_quarantine_wav" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 13 = 0 THEN 'not a RIFF/WAVE payload' ELSE 'ok' END AS wav_status,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 8000 END::BIGINT AS sample_rate,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE strlen(text) END::BIGINT AS n_samples
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "m_media_quarantine_avi" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 13 = 0 THEN 'not a RIFF/AVI payload' ELSE 'ok' END AS avi_status,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL
-        |       ELSE greatest(1, CAST(ceil(strlen(text) / 48.0) AS BIGINT)) END::BIGINT AS n_frames,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 4 END::BIGINT AS frame_w,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE 4 END::BIGINT AS frame_h
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "m_media_dedup" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents)
-        |SELECT min(media_id) AS media_id, md5(text) AS content_hash,
-        |  CAST(count(*) AS BIGINT) AS n_copies
-        |FROM m GROUP BY md5(text) ORDER BY media_id""".stripMargin,
-
-    "m_media_ann" -> {
-      val cos = "round(list_dot_product(a.v::DOUBLE[], b.v::DOUBLE[]) / " +
-        "(sqrt(list_dot_product(a.v::DOUBLE[], a.v::DOUBLE[])) * " +
-        "sqrt(list_dot_product(b.v::DOUBLE[], b.v::DOUBLE[]))), 6)"
-      s"""WITH $featureCtes,
-         |fl AS (SELECT media_id, list(CAST(fv AS FLOAT) ORDER BY band, ch) AS v
-         |       FROM f GROUP BY media_id),
-         |${OracleSamples.sampleCte("mqs", "fl", "media_id")},
-         |sc AS (SELECT a.media_id AS qid, b.media_id AS nid, $cos AS cos
-         |       FROM fl a JOIN fl b ON b.media_id <> a.media_id
-         |       WHERE a.media_id IN (SELECT media_id FROM mqs))
-         |SELECT qid, nid, cos, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rk
-         |  FROM sc)
-         |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
     },
-
-    "m_media_scene_cuts" ->
-      """WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS len,
-        |       greatest(1, CAST(ceil(strlen(text) / 48.0) AS INT))::INT AS nf
-        |     FROM documents),
-        |bybyte AS (SELECT media_id, (p - 1) // 48 AS fidx,
-        |        ord(substring(text, p, 1)) AS v
-        |      FROM d, unnest(range(1, len + 1)) AS u(p)),
-        |sf AS (SELECT media_id, fidx, CAST(sum(v) AS BIGINT) AS s
-        |       FROM bybyte GROUP BY media_id, fidx),
-        |dd AS (SELECT media_id, fidx, s,
-        |       lag(s) OVER (PARTITION BY media_id ORDER BY fidx) AS prev FROM sf)
-        |SELECT d.media_id, nf AS n_frames,
-        |  CAST(sum(CASE WHEN abs(s - prev) > 1536 THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
-        |  CAST(coalesce(max(abs(s - prev)), 0) AS BIGINT) AS max_delta
-        |FROM d JOIN dd USING (media_id)
-        |GROUP BY d.media_id, nf ORDER BY media_id""".stripMargin,
-
-    "m_media_phash" ->
       s"""WITH $featureCtes,
          |slot AS (SELECT rc.media_id, rc.band, c.ch,
          |        coalesce(bs.s, 0) AS s, rc.cnt
@@ -411,142 +443,86 @@ object MediaQueries {
          |  FROM slot s JOIN tot t USING (media_id) GROUP BY s.media_id)
          |SELECT a.media_id AS m1, b.media_id AS m2, a.ahash
          |FROM ah a JOIN ah b ON a.ahash = b.ahash AND a.media_id < b.media_id
-         |ORDER BY m1, m2""".stripMargin,
+         |ORDER BY m1, m2""".stripMargin),
 
-    "m_media_stats" ->
-      """SELECT doc_id AS media_id, strlen(text)::BIGINT AS n_bytes,
-        |  sha256(text) AS content_sha, 4 AS img_w,
-        |  greatest(1, CAST(ceil(strlen(text) / 12.0) AS INT))::INT AS img_h
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // 8-bit PCM: sample value = text byte, amplitude = value - 128;
-    // segment of (1-based) sample p = ((p-1) * 4) // n
-    "m_media_wav" -> {
-      val rmsCols = (0 until 4).map { i =>
-        s"coalesce(max(CASE WHEN seg = $i THEN rms END), 0.0) AS rms$i"
-      }.mkString(",\n  ")
-      s"""WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS n FROM documents),
-         |sq AS (SELECT media_id, ((p - 1) * 4) // n AS seg,
-         |         sum((ord(substring(text, p, 1)) - 128)
-         |           * (ord(substring(text, p, 1)) - 128)) AS ss,
-         |         count(*) AS cnt
-         |       FROM d, unnest(range(1, n + 1)) AS u(p)
-         |       GROUP BY media_id, ((p - 1) * 4) // n),
-         |r AS (SELECT media_id, seg,
-         |        round(sqrt(CAST(ss AS DOUBLE) / cnt), 6) AS rms FROM sq)
-         |SELECT d.media_id, 8000 AS sample_rate, n::BIGINT AS n_samples,
-         |  $rmsCols
-         |FROM d LEFT JOIN r USING (media_id)
-         |GROUP BY d.media_id, n ORDER BY d.media_id""".stripMargin
+    // the video flavor: payload → real RIFF/AVI container (uncompressed
+    // 24-bpp DIB frames in a movi LIST) → real nested-LIST chunk walk →
+    // PER-FRAME banded channel means. Frame f covers payload bytes
+    // [f*48, f*48+48) (width 4 × 4 rows × 3 channels); 2 bands × 3
+    // channels, 8 bytes per slot (zero padding counted, exactly as the
+    // decoder sees the stored frame) — all integer arithmetic, fully
+    // hash-checked.
+    QuerySpec("m_media_video", (s, dir) => {
+      val media = TableCatalog.load(s, dir, "documents")
+        .select(col("doc_id").as("media_id"),
+          col("text").cast("binary").as("bytes"))
+      val decoded = Multimodal.decodeAvi(
+        Multimodal.encodeAvi(media, width = 4, frameRows = 4), bands = 2)
+      val ex = decoded.select(col("media_id"), col("n_frames"),
+        col("frame_counts"), posexplode(col("frame_sums")).as(Seq("fidx", "sums")))
+      val feats = (0 until 6).map(i =>
+        element_at(Multimodal.bandMeanFeatures(col("sums"),
+          element_at(col("frame_counts"), col("fidx") + 1)), i + 1).as(s"f$i"))
+      ex.select(Seq(col("media_id"), col("n_frames"),
+          col("fidx").cast("int").as("fidx")) ++ feats: _*)
+        .orderBy("media_id", "fidx")
     },
+      // payload byte p (1-based, q = p-1): frame q//48, row-in-frame
+      // (q//12)%4, band = row//2 (2 bands over 4 rows), channel q%3;
+      // every (frame, band, ch) slot counts exactly 8 stored bytes
+      {
+        val fcols = (0 until 6).map { i =>
+          s"coalesce(max(CASE WHEN band = ${i / 3} AND ch = ${i % 3} THEN fv END), 0.0) AS f$i"
+        }.mkString(",\n  ")
+        s"""WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS len,
+           |       greatest(1, CAST(ceil(strlen(text) / 48.0) AS INT))::INT AS nf
+           |     FROM documents),
+           |bybyte AS (SELECT media_id, (p - 1) // 48 AS fidx,
+           |        (((p - 1) // 12) % 4) // 2 AS band, (p - 1) % 3 AS ch,
+           |        ord(substring(text, p, 1)) AS v
+           |      FROM d, unnest(range(1, len + 1)) AS u(p)),
+           |slots AS (SELECT d.media_id, d.nf, fr.fidx, bd.band, c.ch
+           |      FROM d, unnest(range(0, d.nf)) AS fr(fidx),
+           |           unnest(range(0, 2)) AS bd(band),
+           |           unnest(range(0, 3)) AS c(ch)),
+           |bs AS (SELECT media_id, fidx, band, ch, sum(v) AS sv
+           |       FROM bybyte GROUP BY media_id, fidx, band, ch),
+           |f AS (SELECT sl.media_id, sl.nf, sl.fidx, sl.band, sl.ch,
+           |        round(CAST(coalesce(bs.sv, 0) AS DOUBLE) / 8, 6) AS fv
+           |      FROM slots sl LEFT JOIN bs ON bs.media_id = sl.media_id
+           |        AND bs.fidx = sl.fidx AND bs.band = sl.band AND bs.ch = sl.ch)
+           |SELECT media_id, nf AS n_frames, fidx::INT AS fidx,
+           |  $fcols
+           |FROM f GROUP BY media_id, nf, fidx ORDER BY media_id, fidx""".stripMargin
+      }),
 
-    "m_media_audio" -> {
-      val amp = "(ord(substring(text, p, 1)) - 128)"
-      val ampPrev = "(ord(substring(text, p - 1, 1)) - 128)"
-      val zcCols = (0 until 4).map { i =>
-        s"coalesce(max(CASE WHEN seg = $i THEN z END), 0)::BIGINT AS zc$i"
-      }.mkString(",\n  ")
-      s"""WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS n FROM documents),
-         |s AS (SELECT media_id, CAST(sum($amp) AS BIGINT) AS amp_sum
-         |      FROM d, unnest(range(1, n + 1)) AS u(p) GROUP BY media_id),
-         |zc AS (SELECT d.media_id, ((p - 1) * 4) // n AS seg,
-         |    CAST(sum(CASE WHEN (n * $amp < amp_sum) <> (n * $ampPrev < amp_sum)
-         |             THEN 1 ELSE 0 END) AS BIGINT) AS z
-         |  FROM d JOIN s USING (media_id), unnest(range(2, n + 1)) AS u(p)
-         |  GROUP BY d.media_id, ((p - 1) * 4) // n)
-         |SELECT d.media_id, n::BIGINT AS n_samples,
-         |  $zcCols
-         |FROM d LEFT JOIN zc USING (media_id)
-         |GROUP BY d.media_id, n ORDER BY d.media_id""".stripMargin
+    // the full pipeline: encode → content stats → REAL decode → frame
+    // sampling, every emitted value DuckDB-replicable (n_bytes is the
+    // BMP file size 54 + 12·h; f0..f11 the banded channel means)
+    QuerySpec("m_media_pipeline", (s, dir) => {
+      val decoded = Multimodal.decodeBmp(
+        Multimodal.withContentStats(bmpMedia(s, dir), bytesCol = "bmp"),
+        bands = 4)
+      val sampled = Multimodal.frameSample(decoded, n = 4, frameLen = 16,
+        bytesCol = "bmp")
+      val feats = (0 until 12).map(i =>
+        element_at(Multimodal.bandMeanFeatures(
+          col("band_sums"), col("band_counts")), i + 1).as(s"f$i"))
+      sampled.select(Seq(col("media_id"), col("n_bytes"), col("img_w"),
+          col("img_h")) ++ feats :+ size(col("frames")).as("n_frames"): _*)
+        .orderBy("media_id")
     },
-
-    // payload byte p (1-based, q = p-1): frame q//48, row-in-frame
-    // (q//12)%4, band = row//2 (2 bands over 4 rows), channel q%3;
-    // every (frame, band, ch) slot counts exactly 8 stored bytes
-    "m_media_video" -> {
-      val fcols = (0 until 6).map { i =>
-        s"coalesce(max(CASE WHEN band = ${i / 3} AND ch = ${i % 3} THEN fv END), 0.0) AS f$i"
-      }.mkString(",\n  ")
-      s"""WITH d AS (SELECT doc_id AS media_id, text, strlen(text) AS len,
-         |       greatest(1, CAST(ceil(strlen(text) / 48.0) AS INT))::INT AS nf
-         |     FROM documents),
-         |bybyte AS (SELECT media_id, (p - 1) // 48 AS fidx,
-         |        (((p - 1) // 12) % 4) // 2 AS band, (p - 1) % 3 AS ch,
-         |        ord(substring(text, p, 1)) AS v
-         |      FROM d, unnest(range(1, len + 1)) AS u(p)),
-         |slots AS (SELECT d.media_id, d.nf, fr.fidx, bd.band, c.ch
-         |      FROM d, unnest(range(0, d.nf)) AS fr(fidx),
-         |           unnest(range(0, 2)) AS bd(band),
-         |           unnest(range(0, 3)) AS c(ch)),
-         |bs AS (SELECT media_id, fidx, band, ch, sum(v) AS sv
-         |       FROM bybyte GROUP BY media_id, fidx, band, ch),
-         |f AS (SELECT sl.media_id, sl.nf, sl.fidx, sl.band, sl.ch,
-         |        round(CAST(coalesce(bs.sv, 0) AS DOUBLE) / 8, 6) AS fv
-         |      FROM slots sl LEFT JOIN bs ON bs.media_id = sl.media_id
-         |        AND bs.fidx = sl.fidx AND bs.band = sl.band AND bs.ch = sl.ch)
-         |SELECT media_id, nf AS n_frames, fidx::INT AS fidx,
-         |  $fcols
-         |FROM f GROUP BY media_id, nf, fidx ORDER BY media_id, fidx""".stripMargin
-    },
-
-    "m_media_pipeline" -> {
-      val fcols = (0 until 12).map { i =>
-        s"coalesce(max(CASE WHEN band = ${i / 3} AND ch = ${i % 3} THEN fv END), 0.0) AS f$i"
-      }.mkString(",\n  ")
-      s"""WITH $featureCtes
-         |SELECT d.media_id, (54 + 12 * d.h)::BIGINT AS n_bytes,
-         |  4 AS img_w, d.h AS img_h,
-         |  $fcols,
-         |  4 AS n_frames
-         |FROM d JOIN f USING (media_id)
-         |GROUP BY d.media_id, d.h ORDER BY d.media_id""".stripMargin
-    },
-
-    "m_media_semantic_dedup" -> {
-      def cos(a: String, b: String) =
-        s"round(list_dot_product($a::DOUBLE[], $b::DOUBLE[]) / " +
-          s"(sqrt(list_dot_product($a::DOUBLE[], $a::DOUBLE[])) * " +
-          s"sqrt(list_dot_product($b::DOUBLE[], $b::DOUBLE[]))), 6)"
-      // band-mean features over originals + planted id-shifted copies
-      // (identical bytes -> identical vectors), then the d_semantic_dedup
-      // kmeans/drop logic over them
-      s"""WITH $featureCtes,
-         |fl0 AS (SELECT media_id, list(CAST(fv AS FLOAT) ORDER BY band, ch) AS v
-         |       FROM f GROUP BY media_id),
-         |-- content-hash fixed-count corpus slice, lockstep with the Spark
-         |-- gate (5000 hash-minimal ids = the full table at gate SFs)
-         |${OracleSamples.sliceCte("fl", "fl0", "media_id", 5000)},
-         |fm AS (SELECT media_id, v FROM fl
-         |       UNION ALL
-         |       SELECT media_id + 1000000, v FROM fl),
-         |c0 AS (SELECT media_id AS cid, v AS cv FROM fm ORDER BY media_id LIMIT 4),
-         |a1 AS (SELECT media_id, cid FROM (
-         |  SELECT e.media_id, c.cid,
-         |    row_number() OVER (PARTITION BY e.media_id ORDER BY ${cos("e.v", "c.cv")} DESC, c.cid) AS rk
-         |  FROM fm e CROSS JOIN c0 c) WHERE rk = 1),
-         |m1 AS (SELECT a1.cid, dm.dim,
-         |         CAST(sum(CAST(CAST(e.v[dm.dim] AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
-         |           / count(*) AS mv
-         |       FROM a1 JOIN fm e USING (media_id),
-         |            unnest(range(1, len(e.v) + 1)) AS dm(dim)
-         |       GROUP BY a1.cid, dm.dim),
-         |c1 AS (SELECT c0.cid,
-         |         CASE WHEN count(m1.mv) = 0 THEN any_value(c0.cv)
-         |              ELSE list(CAST(m1.mv AS FLOAT) ORDER BY m1.dim) END AS cv
-         |       FROM c0 LEFT JOIN m1 ON m1.cid = c0.cid
-         |       GROUP BY c0.cid),
-         |assign AS (SELECT media_id, cid FROM (
-         |  SELECT e.media_id, c.cid,
-         |    row_number() OVER (PARTITION BY e.media_id ORDER BY ${cos("e.v", "c.cv")} DESC, c.cid) AS crk
-         |  FROM fm e CROSS JOIN c1 c) WHERE crk = 1),
-         |dropped AS (SELECT DISTINCT b.media_id
-         |  FROM assign a JOIN assign b ON a.cid = b.cid AND a.media_id < b.media_id
-         |  JOIN fm x ON x.media_id = a.media_id
-         |  JOIN fm y ON y.media_id = b.media_id
-         |  WHERE ${cos("x.v", "y.v")} >= 0.99)
-         |SELECT a.media_id, a.cid AS cluster_id, dr.media_id IS NULL AS kept
-         |FROM assign a LEFT JOIN dropped dr USING (media_id)
-         |ORDER BY a.media_id""".stripMargin
-    }
+      {
+        val fcols = (0 until 12).map { i =>
+          s"coalesce(max(CASE WHEN band = ${i / 3} AND ch = ${i % 3} THEN fv END), 0.0) AS f$i"
+        }.mkString(",\n  ")
+        s"""WITH $featureCtes
+           |SELECT d.media_id, (54 + 12 * d.h)::BIGINT AS n_bytes,
+           |  4 AS img_w, d.h AS img_h,
+           |  $fcols,
+           |  4 AS n_frames
+           |FROM d JOIN f USING (media_id)
+           |GROUP BY d.media_id, d.h ORDER BY d.media_id""".stripMargin
+      })
   )
 }

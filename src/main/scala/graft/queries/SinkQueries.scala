@@ -26,7 +26,8 @@ import graft.sinks.TFRecordSink
   */
 object SinkQueries {
 
-  private val base = "/root/repo/target/sinkgate"
+  // under the checkout the JVM runs from, like Spark's own warehouse dir
+  private val base = s"${sys.props("user.dir")}/target/sinkgate"
 
   private def clean(s: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
@@ -38,11 +39,11 @@ object SinkQueries {
   private def fileName(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_extract(c, "[^/]+$", 0)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val specs: Seq[QuerySpec] = Seq(
 
     // K1: text dynamic sink round-trip — CSV split by region key, header
     // per file, exact single-file-per-key naming (withoutSharding).
-    "k1_text_sink_roundtrip" -> ((s, dir) => {
+    QuerySpec("k1_text_sink_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k1")
       val res = Templates.queryToText(s, Templates.QueryToTextConfig(
@@ -56,11 +57,20 @@ object SinkQueries {
         .select(fileName(input_file_name()).as("file_name"),
           col("value").as("line"))
         .orderBy("file_name", "line")
-    }),
+    },
+      """WITH lines AS (
+        |  SELECT 'nation_' || n_regionkey || '.csv' AS file_name,
+        |         n_nationkey || ',' || n_name || ',' || n_regionkey AS line
+        |  FROM nation
+        |  UNION ALL
+        |  SELECT DISTINCT 'nation_' || n_regionkey || '.csv',
+        |         'n_nationkey,n_name,n_regionkey'
+        |  FROM nation)
+        |SELECT file_name, line FROM lines ORDER BY file_name, line""".stripMargin),
 
     // K2: avro dynamic sink round-trip — one snappy container per split
     // key, read back per file so row↔file routing is part of the hash.
-    "k2_avro_sink_roundtrip" -> ((s, dir) => {
+    QuerySpec("k2_avro_sink_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k2")
       val res = Templates.queryToAvro(s, Templates.QueryToAvroConfig(
@@ -75,13 +85,17 @@ object SinkQueries {
           col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"),
           col("file_name"))
         .orderBy("n_nationkey")
-    }),
+    },
+      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
+        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
+        |  'nation_' || n_regionkey || '.avro' AS file_name
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
 
     // K3: tfrecord sink round-trip — gzip'd Example protos split by
     // region key, parsed back by the wire-format reader; `file_key`
     // recovers which split file each row came from (the -pNNNNN shard
     // index is partition-layout, not semantics, so it is stripped).
-    "k3_tfrecord_sink_roundtrip" -> ((s, dir) => {
+    QuerySpec("k3_tfrecord_sink_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k3")
       val files = Templates.queryToTFRecord(s, Templates.QueryToTFRecordConfig(
@@ -99,13 +113,18 @@ object SinkQueries {
           regexp_extract(col("file_name"),
             "^nation_(.*)-p[0-9]+\\.tfrecord$", 1).as("file_key"))
         .orderBy("n_nationkey")
-    }),
+    },
+      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
+        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
+        |  (n_nationkey / 4.0)::FLOAT AS frac,
+        |  n_regionkey::VARCHAR AS file_key
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
 
     // Compaction under the gate: fragment the documents table into one
     // file per row-group of 32 shards, compact to a single right-sized
     // file, and hash-check that the physical rewrite is content-neutral.
     // `n_files` carries the compaction invariant into the oracle row.
-    "k10_compact_roundtrip" -> ((s, dir) => {
+    QuerySpec("k10_compact_roundtrip", (s, dir) => {
       clean(s, s"$base/k10")
       TableCatalog.load(s, dir, "documents")
         .select("doc_id", "text")
@@ -119,14 +138,16 @@ object SinkQueries {
         .select(col("doc_id"), col("text"),
           lit(r.filesAfter.toLong).as("n_files"))
         .orderBy("doc_id")
-    }),
+    },
+      """SELECT doc_id, text, CAST(1 AS BIGINT) AS n_files
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // S5 under the gate: the Avro FILE SOURCE as its own row — logical
     // types (timestamp-micros, long, double, string) written by AvroIO
     // and read back through the container parser must hash-match DuckDB
     // reading the same rows from parquet. Complements k2 (which gates the
     // dynamic-sink path) by pinning the typed round-trip on a fact table.
-    "s5_avro_source_roundtrip" -> ((s, dir) => {
+    QuerySpec("s5_avro_source_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/s5")
       graft.sources.AvroIO.write(
@@ -135,7 +156,9 @@ object SinkQueries {
         s"$base/s5/orders")
       graft.sources.AvroIO.read(s, s"$base/s5/orders")
         .orderBy("o_orderkey")
-    }),
+    },
+      """SELECT o_orderkey, o_orderdate, o_totalprice, o_orderpriority
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // K7 + K9 under the gate: the REPORT_FAILURES error branch — rows
     // with NULL keys fail the mutation writer, land in the error Avro
@@ -143,7 +166,7 @@ object SinkQueries {
     // in the table. The gate frame reads the error file back and carries
     // both counts, so DuckDB recomputes the whole split from the source
     // table alone.
-    "k7_error_branch_roundtrip" -> ((s, dir) => {
+    QuerySpec("k7_error_branch_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k7")
       Templates.queryToUpsert(s, Templates.QueryToUpsertConfig(
@@ -165,7 +188,14 @@ object SinkQueries {
         .select(col("c_name"), col("c_acctbal"),
           lit(notify).as("n_failed"), lit(nTable).as("n_table"))
         .orderBy("c_name")
-    }),
+    },
+      """WITH f AS (SELECT c_name, c_acctbal FROM customer
+        |           WHERE c_custkey < 200 AND c_custkey % 7 = 0)
+        |SELECT c_name, c_acctbal,
+        |  (SELECT count(*) FROM f)::BIGINT AS n_failed,
+        |  (SELECT count(*) FROM customer
+        |   WHERE c_custkey < 200 AND c_custkey % 7 <> 0)::BIGINT AS n_table
+        |FROM f ORDER BY c_name""".stripMargin),
 
     // K4 under the gate: the warehouse table sink (CREATE_IF_NEEDED +
     // WRITE_APPEND parity, `templates/SpannerToBigQuery.java:91-96`) —
@@ -174,7 +204,7 @@ object SinkQueries {
     // union of both batches. Catalog + warehouse-dir leftovers from a
     // previous run are cleared first (a managed parquet table reads
     // whatever files sit at its location).
-    "k4_table_sink_roundtrip" -> ((s, dir) => {
+    QuerySpec("k4_table_sink_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       s.sql("DROP TABLE IF EXISTS k4_gate_tbl")
       val wh = new Path(s.conf.get("spark.sql.warehouse.dir"), "k4_gate_tbl")
@@ -190,7 +220,10 @@ object SinkQueries {
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
           lit(n1 + n2).as("n_written"))
         .orderBy("s_suppkey")
-    }),
+    },
+      """SELECT s_suppkey, s_name, s_nationkey,
+        |  (SELECT count(*) FROM supplier)::BIGINT AS n_written
+        |FROM supplier ORDER BY s_suppkey""".stripMargin),
 
     // K6 under the gate: the entity/document sink — key path
     // `<kind>/<id>`, recursive entity value shaping, configured +
@@ -198,7 +231,7 @@ object SinkQueries {
     // (DuckDB recomputes key, content, and the unindexed list from the
     // source table; the doc struct's text rides as md5 to keep the gate
     // frame narrow).
-    "k6_documents_roundtrip" -> ((s, dir) => {
+    QuerySpec("k6_documents_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k6")
       val out = Templates.queryToDocuments(s, Templates.QueryToDocumentsConfig(
@@ -211,14 +244,19 @@ object SinkQueries {
           col("doc.lang").as("lang"),
           concat_ws(",", col("__unindexed__")).as("unindexed"))
         .orderBy("doc_id")
-    }),
+    },
+      """SELECT 'doc/' || doc_id::VARCHAR AS __key__, doc_id,
+        |  md5(text) AS text_md5, lang,
+        |  CASE WHEN strlen(text) > 1500 THEN 'source,text'
+        |       ELSE 'source' END AS unindexed
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // K5 under the gate: the MERGE-shaped mutation writer's semantics
     // hash-checked end to end — seed a table, INSERT_OR_UPDATE a batch
     // that half-updates/half-inserts, DELETE a key slice, read the final
     // table back; DuckDB recomputes the same three-step state from the
     // source table alone.
-    "k5_upsert_roundtrip" -> ((s, dir) => {
+    QuerySpec("k5_upsert_roundtrip", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k5")
       val table = s"$base/k5/t"
@@ -238,13 +276,23 @@ object SinkQueries {
       s.read.parquet(table)
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
         .orderBy("c_custkey")
-    }),
+    },
+      """WITH cur AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal
+        |             FROM customer WHERE c_custkey < 100),
+        |batch AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal + 1000.0 AS c_acctbal
+        |          FROM customer WHERE c_custkey BETWEEN 50 AND 149),
+        |merged AS (
+        |  SELECT * FROM batch
+        |  UNION ALL
+        |  SELECT * FROM cur WHERE c_custkey NOT IN (SELECT c_custkey FROM batch))
+        |SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM merged
+        |WHERE c_custkey % 10 <> 0 ORDER BY c_custkey""".stripMargin),
 
     // Partitioned-layout compaction under the gate: fragment each lang
     // partition into 8 files, compact every partition independently to
     // one right-sized file, hash-check the rewrite is content-neutral
     // (n_files pins one-file-per-partition via count(DISTINCT lang)).
-    "k12_compact_partitioned" -> ((s, dir) => {
+    QuerySpec("k12_compact_partitioned", (s, dir) => {
       clean(s, s"$base/k12")
       TableCatalog.load(s, dir, "documents")
         .select("doc_id", "lang", "text")
@@ -257,24 +305,29 @@ object SinkQueries {
         .select(col("doc_id"), col("lang"), col("text"),
           lit(totalAfter).as("n_files"))
         .orderBy("doc_id")
-    }),
+    },
+      """SELECT doc_id, lang, text,
+        |  (SELECT count(DISTINCT lang) FROM documents)::BIGINT AS n_files
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // K13: ORC columnar round-trip — Spark's other native columnar
     // format (predicate pushdown + column pruning parity with parquet);
     // doubles and timestamps must survive the encoder bit-exactly for
     // the hash to hold.
-    "k13_orc_roundtrip" -> ((s, dir) => {
+    QuerySpec("k13_orc_roundtrip", (s, dir) => {
       clean(s, s"$base/k13")
       TableCatalog.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         .write.orc(s"$base/k13/t")
       s.read.orc(s"$base/k13/t").orderBy("o_orderkey")
-    }),
+    },
+      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // K14: JSON-lines file round-trip with an EXPLICIT read schema (the
     // lakehouse interchange path; inference would widen types, a pinned
     // schema is the production contract).
-    "k14_jsonl_roundtrip" -> ((s, dir) => {
+    QuerySpec("k14_jsonl_roundtrip", (s, dir) => {
       clean(s, s"$base/k14")
       TableCatalog.load(s, dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -282,13 +335,15 @@ object SinkQueries {
       s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT")
         .json(s"$base/k14/t")
         .orderBy("n_nationkey")
-    }),
+    },
+      """SELECT n_nationkey, n_name, n_regionkey
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
 
     // K15: parquet schema-evolution round-trip — two writer generations
     // with different column sets under one root, read back with
     // mergeSchema (the lakehouse column-add path); absent columns are
     // null in rows from the older files.
-    "k15_schema_merge_roundtrip" -> ((s, dir) => {
+    QuerySpec("k15_schema_merge_roundtrip", (s, dir) => {
       clean(s, s"$base/k15")
       val n = TableCatalog.load(s, dir, "nation")
       n.select("n_nationkey", "n_name").write.parquet(s"$base/k15/t/gen=1")
@@ -296,12 +351,17 @@ object SinkQueries {
         .write.parquet(s"$base/k15/t/gen=2")
       s.read.option("mergeSchema", "true").parquet(s"$base/k15/t")
         .orderBy("gen", "n_nationkey")
-    }),
+    },
+      """SELECT * FROM (
+        |  SELECT n_nationkey, n_name, NULL::INT AS n_regionkey, 1 AS gen FROM nation
+        |  UNION ALL
+        |  SELECT n_nationkey, n_name, n_regionkey, 2 FROM nation)
+        |ORDER BY gen, n_nationkey""".stripMargin),
 
     // K16: XML round-trip — Spark 4's integrated XML datasource (the
     // spark-xml lineage), written with an explicit rowTag and read back
     // with a pinned schema.
-    "k16_xml_roundtrip" -> ((s, dir) => {
+    QuerySpec("k16_xml_roundtrip", (s, dir) => {
       clean(s, s"$base/k16")
       TableCatalog.load(s, dir, "region")
         .select("r_regionkey", "r_name")
@@ -310,14 +370,15 @@ object SinkQueries {
         .schema("r_regionkey INT, r_name STRING")
         .xml(s"$base/k16/t")
         .orderBy("r_regionkey")
-    }),
+    },
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"),
 
     // K17: CSV file-source round-trip — the delimited-text INGEST path
     // (the reference's text sink writes CSV lines; this gate closes the
     // loop with Spark's csv READER under a pinned schema + header).
     // Doubles survive because Spark writes the shortest round-trippable
     // repr (Java Double.toString) and the parser restores the exact bits.
-    "k17_csv_roundtrip" -> ((s, dir) => {
+    QuerySpec("k17_csv_roundtrip", (s, dir) => {
       clean(s, s"$base/k17")
       TableCatalog.load(s, dir, "customer")
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
@@ -327,13 +388,15 @@ object SinkQueries {
           "c_acctbal DOUBLE, c_mktsegment STRING")
         .csv(s"$base/k17/t")
         .orderBy("c_custkey")
-    }),
+    },
+      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
     // Deterministic fixed-shard export under the gate: seeded md5 shuffle
     // of the documents table into 8 exactly-named shard files; the line
     // carries (doc_id, content hash, shard_key) so shard membership, file
     // naming, AND content all sit under the DuckDB hash.
-    "k11_shard_export" -> ((s, dir) => {
+    QuerySpec("k11_shard_export", (s, dir) => {
       clean(s, s"$base/k11")
       val docs = TableCatalog.load(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("content_hash"))
@@ -343,11 +406,20 @@ object SinkQueries {
         .select(fileName(input_file_name()).as("file_name"),
           col("value").as("line"))
         .orderBy("file_name", "line")
-    }),
+    },
+      """WITH a AS (
+        |  SELECT doc_id, md5(text) AS content_hash,
+        |    ((strpos('0123456789abcdef', substring(md5('r6_' || doc_id), 1, 1)) - 1) * 16 +
+        |     (strpos('0123456789abcdef', substring(md5('r6_' || doc_id), 2, 1)) - 1)) % 8 AS shard
+        |  FROM documents)
+        |SELECT 'docs_shard-' || lpad(shard::VARCHAR, 5, '0') || '-of-00008.csv' AS file_name,
+        |  doc_id || ',' || content_hash || ',shard-' ||
+        |    lpad(shard::VARCHAR, 5, '0') || '-of-00008' AS line
+        |FROM a ORDER BY file_name, line""".stripMargin),
 
     // K8: finish-pass notification — the sink's outputNotify file lists
     // every written path; the listing itself becomes the checked frame.
-    "k8_notify_listing" -> ((s, dir) => {
+    QuerySpec("k8_notify_listing", (s, dir) => {
       TableCatalog.register(s, dir)
       clean(s, s"$base/k8")
       Templates.queryToText(s, Templates.QueryToTextConfig(
@@ -360,115 +432,8 @@ object SinkQueries {
       s.read.text(s"$base/k8/notify.txt")
         .select(fileName(col("value")).as("file_name"))
         .orderBy("file_name")
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "k13_orc_roundtrip" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "k14_jsonl_roundtrip" ->
-      """SELECT n_nationkey, n_name, n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "k16_xml_roundtrip" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-
-    "k17_csv_roundtrip" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "k15_schema_merge_roundtrip" ->
-      """SELECT * FROM (
-        |  SELECT n_nationkey, n_name, NULL::INT AS n_regionkey, 1 AS gen FROM nation
-        |  UNION ALL
-        |  SELECT n_nationkey, n_name, n_regionkey, 2 FROM nation)
-        |ORDER BY gen, n_nationkey""".stripMargin,
-
-    "k1_text_sink_roundtrip" ->
-      """WITH lines AS (
-        |  SELECT 'nation_' || n_regionkey || '.csv' AS file_name,
-        |         n_nationkey || ',' || n_name || ',' || n_regionkey AS line
-        |  FROM nation
-        |  UNION ALL
-        |  SELECT DISTINCT 'nation_' || n_regionkey || '.csv',
-        |         'n_nationkey,n_name,n_regionkey'
-        |  FROM nation)
-        |SELECT file_name, line FROM lines ORDER BY file_name, line""".stripMargin,
-
-    "k2_avro_sink_roundtrip" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
-        |  'nation_' || n_regionkey || '.avro' AS file_name
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "k3_tfrecord_sink_roundtrip" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
-        |  (n_nationkey / 4.0)::FLOAT AS frac,
-        |  n_regionkey::VARCHAR AS file_key
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "k8_notify_listing" ->
+    },
       """SELECT DISTINCT 'region_' || r_name || '.json' AS file_name
-        |FROM region ORDER BY file_name""".stripMargin,
-
-    "k12_compact_partitioned" ->
-      """SELECT doc_id, lang, text,
-        |  (SELECT count(DISTINCT lang) FROM documents)::BIGINT AS n_files
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "k11_shard_export" ->
-      """WITH a AS (
-        |  SELECT doc_id, md5(text) AS content_hash,
-        |    ((strpos('0123456789abcdef', substring(md5('r6_' || doc_id), 1, 1)) - 1) * 16 +
-        |     (strpos('0123456789abcdef', substring(md5('r6_' || doc_id), 2, 1)) - 1)) % 8 AS shard
-        |  FROM documents)
-        |SELECT 'docs_shard-' || lpad(shard::VARCHAR, 5, '0') || '-of-00008.csv' AS file_name,
-        |  doc_id || ',' || content_hash || ',shard-' ||
-        |    lpad(shard::VARCHAR, 5, '0') || '-of-00008' AS line
-        |FROM a ORDER BY file_name, line""".stripMargin,
-
-    "k10_compact_roundtrip" ->
-      """SELECT doc_id, text, CAST(1 AS BIGINT) AS n_files
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "s5_avro_source_roundtrip" ->
-      """SELECT o_orderkey, o_orderdate, o_totalprice, o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "k7_error_branch_roundtrip" ->
-      """WITH f AS (SELECT c_name, c_acctbal FROM customer
-        |           WHERE c_custkey < 200 AND c_custkey % 7 = 0)
-        |SELECT c_name, c_acctbal,
-        |  (SELECT count(*) FROM f)::BIGINT AS n_failed,
-        |  (SELECT count(*) FROM customer
-        |   WHERE c_custkey < 200 AND c_custkey % 7 <> 0)::BIGINT AS n_table
-        |FROM f ORDER BY c_name""".stripMargin,
-
-    "k4_table_sink_roundtrip" ->
-      """SELECT s_suppkey, s_name, s_nationkey,
-        |  (SELECT count(*) FROM supplier)::BIGINT AS n_written
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-
-    "k6_documents_roundtrip" ->
-      """SELECT 'doc/' || doc_id::VARCHAR AS __key__, doc_id,
-        |  md5(text) AS text_md5, lang,
-        |  CASE WHEN strlen(text) > 1500 THEN 'source,text'
-        |       ELSE 'source' END AS unindexed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "k5_upsert_roundtrip" ->
-      """WITH cur AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal
-        |             FROM customer WHERE c_custkey < 100),
-        |batch AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal + 1000.0 AS c_acctbal
-        |          FROM customer WHERE c_custkey BETWEEN 50 AND 149),
-        |merged AS (
-        |  SELECT * FROM batch
-        |  UNION ALL
-        |  SELECT * FROM cur WHERE c_custkey NOT IN (SELECT c_custkey FROM batch))
-        |SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM merged
-        |WHERE c_custkey % 10 <> 0 ORDER BY c_custkey""".stripMargin
+        |FROM region ORDER BY file_name""".stripMargin)
   )
 }

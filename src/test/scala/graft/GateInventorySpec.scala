@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lockstep guard between the documented gate surface (SURVEY §8.10's
-  * oracle-ID inventory) and the code (`SparkEntry.queries` /
-  * `SparkEntry.oracleSql`) — the round-9 verdict's ask: a future SURVEY
-  * row can never ship without a gate entry, and a gate entry can never
-  * ship undocumented. Also pins the invariant that every query has an
-  * oracle (the driver's hash gate, not the weaker rows-only check). */
+  * oracle-ID inventory) and the query registry (`SparkEntry.specs`): a
+  * future SURVEY row can never ship without a gate entry, and a gate
+  * entry can never ship undocumented. Also pins that each name is
+  * written once and that every query has an oracle (the driver's hash
+  * gate, not the weaker rows-only check). */
 class GateInventorySpec extends AnyFunSuite {
 
   private def surveyInventory: Set[String] = {
@@ -34,39 +34,38 @@ class GateInventorySpec extends AnyFunSuite {
       s"SURVEY §8.10 ids with no queries entry: ${unimplemented.mkString(", ")}")
   }
 
-  test("no query key is defined in two modules (Map ++ would silently shadow one)") {
-    def check(tag: String, modules: Seq[(String, Set[String])],
-              merged: Set[String]): Unit = {
-      val dupes = modules.combinations(2).flatMap { case Seq((na, a), (nb, b)) =>
-        (a intersect b).map(k => s"$k ($na & $nb)")
-      }.toSeq.sorted
-      assert(dupes.isEmpty, s"duplicate $tag keys across modules: ${dupes.mkString(", ")}")
-      assert(modules.map(_._2).reduce(_ ++ _) === merged,
-        s"$tag module union must equal the merged gate surface")
-    }
-    // BOTH sides: a shadowed oracleSql would silently hash Spark output
-    // against the wrong SQL even with the queries side unshadowed
-    check("queries", Seq(
-      "CoreQueries" -> graft.queries.CoreQueries.queries.keySet,
-      "PipelineQueries" -> graft.queries.PipelineQueries.queries.keySet,
-      "ParityQueries" -> graft.queries.ParityQueries.queries.keySet,
-      "MediaQueries" -> graft.queries.MediaQueries.queries.keySet,
-      "SinkQueries" -> graft.queries.SinkQueries.queries.keySet,
-      "AnalyticsQueries" -> graft.queries.AnalyticsQueries.queries.keySet,
-      "StatQueries" -> graft.queries.StatQueries.queries.keySet),
-      SparkEntry.queries.keySet)
-    check("oracleSql", Seq(
-      "CoreQueries" -> graft.queries.CoreQueries.oracleSql.keySet,
-      "PipelineQueries" -> graft.queries.PipelineQueries.oracleSql.keySet,
-      "ParityQueries" -> graft.queries.ParityQueries.oracleSql.keySet,
-      "MediaQueries" -> graft.queries.MediaQueries.oracleSql.keySet,
-      "SinkQueries" -> graft.queries.SinkQueries.oracleSql.keySet,
-      "AnalyticsQueries" -> graft.queries.AnalyticsQueries.oracleSql.keySet,
-      "StatQueries" -> graft.queries.StatQueries.oracleSql.keySet),
-      SparkEntry.oracleSql.keySet)
+  test("query names are distinct within and across modules") {
+    val modules = Seq(
+      "CoreQueries" -> graft.queries.CoreQueries.specs,
+      "PipelineQueries" -> graft.queries.PipelineQueries.specs,
+      "ParityQueries" -> graft.queries.ParityQueries.specs,
+      "MediaQueries" -> graft.queries.MediaQueries.specs,
+      "SinkQueries" -> graft.queries.SinkQueries.specs,
+      "AnalyticsQueries" -> graft.queries.AnalyticsQueries.specs,
+      "StatQueries" -> graft.queries.StatQueries.specs)
+    val owners = modules.flatMap { case (m, specs) => specs.map(_.name -> m) }
+    val dupes = owners.groupBy(_._1).collect {
+      case (n, os) if os.size > 1 => s"$n (${os.map(_._2).mkString(" & ")})"
+    }.toSeq.sorted
+    assert(dupes.isEmpty, s"query names defined twice: ${dupes.mkString(", ")}")
+    assert(SparkEntry.specs.map(_.name) === owners.map(_._1),
+      "SparkEntry.specs must be the modules' specs in order")
+    assert(SparkEntry.queries.size === SparkEntry.specs.size)
+  }
+
+  test("a name written twice in one module is rejected") {
+    val core = graft.queries.CoreQueries.specs
+    val planted = core :+ core.head.copy(oracle = "SELECT 1")
+    val e = intercept[IllegalArgumentException](SparkEntry.requireDistinct(planted))
+    assert(e.getMessage.contains(core.head.name))
+    // a Map keyed by name keeps only the last of the two, silently
+    assert(planted.map(q => q.name -> q.oracle).toMap.size === core.size)
+    assert(SparkEntry.requireDistinct(core) === core)
   }
 
   test("every queries entry has an oracleSql entry and vice versa") {
+    val blank = SparkEntry.specs.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: ${blank.sorted.mkString(", ")}")
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without oracle: ${(q -- o).toSeq.sorted.mkString(", ")}")

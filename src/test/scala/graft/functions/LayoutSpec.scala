@@ -58,39 +58,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("hilbertCluster: disjoint key ranges, boxes at least as tight as Z at the same file count") {
-    val df = (for { x <- 0L until 64L; y <- 0L until 64L } yield (x, y))
-      .toDF("x", "y")
-    val clustered = Layout.hilbertCluster(df, col("x"), col("y"),
-      bits = 6, numRanges = 8)
-    val key = Layout.hilbertKey(col("x"), col("y"), bits = 6)
-    val ranges = clustered.select(spark_partition_id().as("p"), key.as("h"),
-        col("x"), col("y"))
-      .groupBy("p")
-      .agg(min("h").as("hlo"), max("h").as("hhi"),
-        min("x").as("xlo"), max("x").as("xhi"),
-        min("y").as("ylo"), max("y").as("yhi"),
-        count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getAs[Long]("hlo"), r.getAs[Long]("hhi"),
-        r.getAs[Long]("xlo"), r.getAs[Long]("xhi"),
-        r.getAs[Long]("ylo"), r.getAs[Long]("yhi"), r.getAs[Long]("n")))
-      .sortBy(_._1)
-    assert(ranges.map(_._7).sum === 64L * 64L)
-    ranges.sliding(2).foreach {
-      case Array(a, b) => assert(a._2 < b._1)
-      case _ =>
-    }
-    // the Hilbert locality claim, measured: every partition's bounding
-    // box is at most a quarter of the domain (Z only guarantees a half
-    // at this range count — its diagonal jumps span quadrants)
-    ranges.foreach { r =>
-      val area = (r._4 - r._3 + 1) * (r._6 - r._5 + 1)
-      assert(area <= 64L * 64L / 4,
-        s"partition box $r covers too much of the domain")
-    }
-  }
-
   test("hilbertKey: 2x2 hand values, 8x8 bijectivity, and every curve step is grid-adjacent") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -33,13 +33,6 @@ class ModelStoreSpec extends SparkSpec {
       cbs.map(_.map { case (c, v) => (c, v.toSeq) }))
   }
 
-  test("SQ model round-trips in dimension order") {
-    val dir = tmpDir("modelstore")
-    val model = Seq((0.0f, 1.0f), (-3.5f, 2.25f), (9f, 9f))
-    ModelStore.saveSqModel(spark, model, dir, "sq")
-    assert(ModelStore.loadSqModel(spark, dir, "sq") === model)
-  }
-
   test("BPE merge table round-trips in training (rk) order") {
     val dir = tmpDir("modelstore")
     val docs = Seq((1L, "low low lower"), (2L, "low lowest")).toDF("doc_id", "text")

@@ -3,7 +3,7 @@ package graft.queries
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Hand-computed semantics for the statistics tier: these queries' DuckDB
   * oracles mirror the implementation algebra, so the semantic pin is a
@@ -43,7 +43,7 @@ class StatSpec extends SparkSpec {
     // function of x_t (y = 12 - x), so lag-1 r is exactly -1; lag-2 pairs
     // satisfy y = x, so r is exactly +1.
     val d = fixture("events" -> eventsByDay((0 until 10).map(i => (i, if (i % 2 == 0) 10 else 2))))
-    val acf = StatQueries.queries("q_acf")(spark, d)
+    val acf = SparkEntry.queries("q_acf")(spark, d)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(acf(1L) === -1.0)
     assert(acf(2L) === 1.0)
@@ -57,7 +57,7 @@ class StatSpec extends SparkSpec {
     val off = (7 - (base % 7).toInt) % 7 // first fixture day with day_n % 7 == 0
     val d = fixture("events" -> eventsByDay(
       (0 until 21).map(i => (i, if ((i - off) % 7 == 0) 107 else 100))))
-    val rows = StatQueries.queries("q_seasonal_decomp")(spark, d).collect()
+    val rows = SparkEntry.queries("q_seasonal_decomp")(spark, d).collect()
     assert(rows.length === 21 - 6)
     rows.foreach { r =>
       assert(r.getAs[Double]("trend") === 101.0)
@@ -71,7 +71,7 @@ class StatSpec extends SparkSpec {
     // cnt = 1..10 ascending, no ties: S = 45, varnum = 10*9*25 = 2250,
     // z = (45-1)/sqrt(2250/18).
     val d = fixture("events" -> eventsByDay((0 until 10).map(i => (i, i + 1))))
-    val r = StatQueries.queries("q_mann_kendall")(spark, d).collect().head
+    val r = SparkEntry.queries("q_mann_kendall")(spark, d).collect().head
     assert(r.getAs[Long]("s") === 45L)
     assert(r.getAs[Long]("varnum") === 2250L)
     val expZ = BigDecimal(44.0 / math.sqrt(2250.0 / 18.0))
@@ -92,7 +92,7 @@ class StatSpec extends SparkSpec {
       (4L, ts("2026-01-05 12:10:00"), 20L, "view", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val rows = StatQueries.queries("q_survival_km")(spark, d).collect()
+    val rows = SparkEntry.queries("q_survival_km")(spark, d).collect()
       .map(r => (r.getAs[Long]("t_min"),
         (r.getAs[Long]("n_risk"), r.getAs[Long]("n_death"),
           r.getAs[Long]("n_censor"), r.getAs[Double]("survival")))).toMap
@@ -103,7 +103,7 @@ class StatSpec extends SparkSpec {
 
   test("DP counts: noise is reproducible, bounded, and matches the inverse-CDF closed form") {
     val d = fixture("events" -> eventsByDay(Seq((0, 50), (1, 50)), i => if (i % 2 == 0) "view" else "click"))
-    val out = StatQueries.queries("q_dp_counts")(spark, d)
+    val out = SparkEntry.queries("q_dp_counts")(spark, d)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.length === 2)
     out.foreach { case (etype, nTrue, nNoisy) =>
@@ -121,7 +121,7 @@ class StatSpec extends SparkSpec {
       assert(nNoisy === exp)
     }
     // reproducibility: a second run yields the identical frame
-    val again = StatQueries.queries("q_dp_counts")(spark, d)
+    val again = SparkEntry.queries("q_dp_counts")(spark, d)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq === again.toSeq)
   }
@@ -132,7 +132,7 @@ class StatSpec extends SparkSpec {
       (79927398714L, "bad", 1, 100.0, "BUILDING")   // off-by-one checksum
     ).toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     val d = fixture("customer" -> cust)
-    val r = StatQueries.queries("q_luhn_check")(spark, d).collect().head
+    val r = SparkEntry.queries("q_luhn_check")(spark, d).collect().head
     assert(r.getAs[Long]("n_total") === 2L)
     assert(r.getAs[Long]("n_valid") === 1L)
   }
@@ -145,7 +145,7 @@ class StatSpec extends SparkSpec {
       "l_quantity", "l_extendedprice", "l_discount", "l_tax",
       "l_returnflag", "l_linestatus", "l_shipdate")
     val d = fixture("lineitem" -> li)
-    val m = StatQueries.queries("q_corr_matrix")(spark, d).collect()
+    val m = SparkEntry.queries("q_corr_matrix")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1)) -> Option(r.get(2))).toMap
     assert(m(("l_extendedprice", "l_quantity")) === Some(1.0)) // e = 2q
     assert(m(("l_quantity", "l_tax")) === Some(-1.0))          // t = 9 - q
@@ -162,7 +162,7 @@ class StatSpec extends SparkSpec {
       (4L, "spark window batch", "fr", "src0", 10L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val r = StatQueries.queries("t_classifier_auc")(spark, d).collect().head
+    val r = SparkEntry.queries("t_classifier_auc")(spark, d).collect().head
     assert(r.getAs[Long]("n1") === 2L)
     assert(r.getAs[Long]("n0") === 2L)
     assert(r.getAs[Double]("auc") === 1.0)
@@ -177,7 +177,7 @@ class StatSpec extends SparkSpec {
       (4L, "el los y es no por una", "es", "src0", 10L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> agree)
-    val r = StatQueries.queries("t_cohens_kappa")(spark, d).collect().head
+    val r = SparkEntry.queries("t_cohens_kappa")(spark, d).collect().head
     assert(r.getAs[Long]("ndiag") === 4L)
     assert(r.getAs[Double]("kappa") === 1.0)
   }
@@ -189,7 +189,7 @@ class StatSpec extends SparkSpec {
       (3L, "a slow and 5low query", "en", "srcB", 10L)          // 5 -> s
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("t_blocklist")(spark, d).collect()
+    val rows = SparkEntry.queries("t_blocklist")(spark, d).collect()
       .map(r => r.getString(0) -> ((r.getAs[Long]("n_flagged"), r.getAs[Long]("total_hits")))).toMap
     assert(rows("srcA") === ((1L, 1L))) // sp4m counted, clean doc not
     assert(rows("srcB") === ((1L, 2L))) // slow + 5low both hit
@@ -201,7 +201,7 @@ class StatSpec extends SparkSpec {
         ((99L, "loner", 2, 9500.0, "MACHINERY"))
     ).toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     val d = fixture("customer" -> cust)
-    val r = StatQueries.queries("q_k_anonymity")(spark, d).collect().head
+    val r = SparkEntry.queries("q_k_anonymity")(spark, d).collect().head
     assert(r.getAs[Long]("n_rows") === 7L)
     assert(r.getAs[Long]("n_groups") === 2L)
     assert(r.getAs[Long]("n_small_groups") === 1L)
@@ -223,14 +223,14 @@ class StatSpec extends SparkSpec {
     ).toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
       "o_orderdate", "o_orderpriority")
     val d = fixture("orders" -> ord)
-    val l = StatQueries.queries("q_l_diversity")(spark, d).collect().head
+    val l = SparkEntry.queries("q_l_diversity")(spark, d).collect().head
     assert(l.getAs[Long]("n_rows") === 10L)
     assert(l.getAs[Long]("n_groups") === 3L)
     assert(l.getAs[Long]("min_l") === 1L)
     assert(l.getAs[Long]("n_disclosed_groups") === 2L)
     assert(l.getAs[Long]("n_rows_disclosed") === 6L)
     assert(l.getAs[Double]("disclosed_share") === 0.6)
-    val t = StatQueries.queries("q_t_closeness")(spark, d).collect().head
+    val t = SparkEntry.queries("q_t_closeness")(spark, d).collect().head
     assert(t.getAs[Long]("n_groups") === 3L)
     assert(t.getAs[Double]("max_tv") === 0.8)
     assert(t.getAs[Long]("n_groups_above") === 3L)
@@ -255,7 +255,7 @@ class StatSpec extends SparkSpec {
     val supp = Seq((200L, "s")).toDF("s_suppkey", "s_name")
     val d = fixture("orders" -> ord, "customer" -> cust, "lineitem" -> li,
       "part" -> part, "supplier" -> supp)
-    val rows = StatQueries.queries("q_fk_orphans")(spark, d).collect()
+    val rows = SparkEntry.queries("q_fk_orphans")(spark, d).collect()
       .map(r => r.getString(0) -> r.getAs[Long]("n_orphan")).toMap
     assert(rows === Map(
       "lineitem->orders" -> 1L, "lineitem->part" -> 0L,
@@ -267,7 +267,7 @@ class StatSpec extends SparkSpec {
     val emb = Seq.tabulate(6)(i => (i.toLong, v, 0))
       .toDF("vec_id", "embedding", "label")
     val d = fixture("embeddings" -> emb)
-    val r = StatQueries.queries("a_embed_diagnostics")(spark, d).collect().head
+    val r = SparkEntry.queries("a_embed_diagnostics")(spark, d).collect().head
     assert(r.getAs[Long]("n_vecs") === 6L)
     assert(r.getAs[Double]("mean_sq_norm") === 2.0) // 8 * 0.25
     assert(r.getAs[Double]("centroid_sq_norm") === 2.0)
@@ -285,7 +285,7 @@ class StatSpec extends SparkSpec {
       (i.toLong, v, axis)
     }.toDF("vec_id", "embedding", "label")
     val d = fixture("embeddings" -> emb)
-    val rows = StatQueries.queries("a_ivf_nprobe_curve")(spark, d).collect()
+    val rows = SparkEntry.queries("a_ivf_nprobe_curve")(spark, d).collect()
       .map(r => r.getAs[Long]("nprobe") -> r.getAs[Double]("mean_recall")).toMap
     assert(rows.keySet === Set(1L, 2L, 4L))
     assert(rows(1L) <= rows(2L) && rows(2L) <= rows(4L))
@@ -299,7 +299,7 @@ class StatSpec extends SparkSpec {
       (11L, "another unrelated second text about shuffle partitions and skew handling", "en", "src0", 50L)
     )).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val r = StatQueries.queries("g_assortativity")(spark, d).collect().head
+    val r = SparkEntry.queries("g_assortativity")(spark, d).collect().head
     assert(r.getAs[Long]("n_edges") === 6L) // the 4-clique
     assert(r.isNullAt(r.fieldIndex("assortativity"))) // all degrees equal
   }
@@ -310,7 +310,7 @@ class StatSpec extends SparkSpec {
         Seq.tabulate(2)(i => ((10 + i).toLong, ts(s"2026-01-05 11:0$i:00"), 1L, "view", 1.0, "{}"))
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val r = StatQueries.queries("q_rate_limit")(spark, d).collect().head
+    val r = SparkEntry.queries("q_rate_limit")(spark, d).collect().head
     assert(r.getAs[Long]("n_events") === 7L)
     assert(r.getAs[Long]("n_kept") === 5L)   // 3 in hour one, 2 in hour two
     assert(r.getAs[Long]("n_dropped") === 2L)
@@ -323,7 +323,7 @@ class StatSpec extends SparkSpec {
       (3L, ts("2026-01-05 10:02:00"), 100L, "purchase", 3.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val rows = StatQueries.queries("q_window_family")(spark, d).collect()
+    val rows = SparkEntry.queries("q_window_family")(spark, d).collect()
       .map(r => r.getAs[Long]("event_id") -> r).toMap
     assert(rows(1L).getAs[String]("first_et") === "view")
     assert(rows(1L).getAs[String]("last_et") === "purchase") // full frame, not running
@@ -338,7 +338,7 @@ class StatSpec extends SparkSpec {
     // epoch-day coordinates: y = slope*x + b with x = epoch day.
     val base = java.time.LocalDate.parse("2026-01-05").toEpochDay
     val d = fixture("events" -> eventsByDay((0 until 8).map(i => (i, 2 + 3 * i))))
-    val r = StatQueries.queries("q_grouped_ols")(spark, d).collect().head
+    val r = SparkEntry.queries("q_grouped_ols")(spark, d).collect().head
     assert(r.getAs[Long]("n") === 8L)
     assert(r.getAs[Double]("slope") === 3.0)
     assert(r.getAs[Double]("r2") === 1.0)
@@ -398,7 +398,7 @@ class StatSpec extends SparkSpec {
       ((99L, "zzz zzz zzz and nothing else here", "en", "src0", 30L))
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("a_prf_expansion")(spark, d).collect()
+    val rows = SparkEntry.queries("a_prf_expansion")(spark, d).collect()
     val doc99 = rows.find(_.getAs[Long]("doc_id") == 99L)
     assert(doc99.isDefined, "expansion must surface the zzz-only doc")
     assert(doc99.get.getAs[Double]("score") > 0.0)
@@ -412,7 +412,7 @@ class StatSpec extends SparkSpec {
       (3L, "short text", "fr", "src0", 10L)      // <= 20 tokens: plain TTR = 1.0
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("t_mattr")(spark, d).collect()
+    val rows = SparkEntry.queries("t_mattr")(spark, d).collect()
       .map(r => r.getString(0) -> r.getAs[Double]("mean_mattr")).toMap
     assert(rows("en") === 1.0)
     assert(rows("de") === 0.05)
@@ -427,7 +427,7 @@ class StatSpec extends SparkSpec {
       (4L, ts("2026-01-06 10:00:00"), 2L, "view", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val rows = StatQueries.queries("q_new_vs_returning")(spark, d).collect()
+    val rows = SparkEntry.queries("q_new_vs_returning")(spark, d).collect()
       .map(r => (r.getAs[Long]("n_active"), r.getAs[Long]("n_new"),
         r.getAs[Long]("n_returning")))
     assert(rows.toSeq === Seq((1L, 1L, 0L), (2L, 1L, 1L)))
@@ -441,7 +441,7 @@ class StatSpec extends SparkSpec {
       (3L, "completely different text about catalyst optimizer internals here", "en", "src0", 60L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val r = StatQueries.queries("d_method_agreement")(spark, d).collect().head
+    val r = SparkEntry.queries("d_method_agreement")(spark, d).collect().head
     assert(r.getAs[Long]("n_minhash") === 1L)
     assert(r.getAs[Long]("n_simhash") === 1L)
     assert(r.getAs[Long]("n_both") === 1L)
@@ -458,7 +458,7 @@ class StatSpec extends SparkSpec {
       (6L, ts("2026-01-05 10:00:00"), 3L, "view", 1.0, "{}")      // never converts
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val r = StatQueries.queries("q_conversion_latency")(spark, d).collect().head
+    val r = SparkEntry.queries("q_conversion_latency")(spark, d).collect().head
     assert(r.getAs[Long]("n_converters") === 2L)
     assert(r.getAs[Double]("p50_us") === 20 * 60 * 1e6) // median of {10, 30} min
   }
@@ -471,7 +471,7 @@ class StatSpec extends SparkSpec {
         Seq((10L, copyB, "en", "src0", 100L), (11L, copyB, "en", "src0", 100L)) // pair: degree 1 each
       ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val r = StatQueries.queries("g_kcore")(spark, d).collect().head
+    val r = SparkEntry.queries("g_kcore")(spark, d).collect().head
     assert(r.getAs[Long]("n_edges") === 4L)      // 3 clique edges + 1 pair edge
     assert(r.getAs[Long]("n_core_edges") === 3L) // the pair peels (deg < 2)
     assert(r.getAs[Long]("n_core_nodes") === 3L)
@@ -486,7 +486,7 @@ class StatSpec extends SparkSpec {
       (5L, "unique document", "en", "srcA", 20L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val r = StatQueries.queries("d_cross_source_dups")(spark, d).collect().head
+    val r = SparkEntry.queries("d_cross_source_dups")(spark, d).collect().head
     assert(r.getAs[Long]("n_dup_groups") === 2L)
     assert(r.getAs[Long]("n_cross_source") === 1L)
     assert(r.getAs[Long]("n_dup_docs") === 4L)
@@ -495,12 +495,12 @@ class StatSpec extends SparkSpec {
 
   test("burstiness: a constant series has Fano 0; a spike train exceeds 1") {
     val flat = fixture("events" -> eventsByDay((0 until 6).map(i => (i, 10))))
-    val rf = StatQueries.queries("t_burstiness")(spark, flat).collect().head
+    val rf = SparkEntry.queries("t_burstiness")(spark, flat).collect().head
     assert(rf.getAs[Double]("fano") === 0.0)
     // days (1,1,1,1,1,25): mean 5, var = (6*630-900)/30 = 96 -> fano 19.2
     val bursty = fixture("events" -> eventsByDay(
       Seq((0, 1), (1, 1), (2, 1), (3, 1), (4, 1), (5, 25))))
-    val rb = StatQueries.queries("t_burstiness")(spark, bursty).collect().head
+    val rb = SparkEntry.queries("t_burstiness")(spark, bursty).collect().head
     assert(rb.getAs[Double]("fano") === 19.2)
   }
 
@@ -512,7 +512,7 @@ class StatSpec extends SparkSpec {
         ts(f"2026-01-05 ${10 + u}%02d:${i % 60}%02d:00"), u.toLong, "view", 1.0, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val r = StatQueries.queries("q_pareto_8020")(spark, d).collect().head
+    val r = SparkEntry.queries("q_pareto_8020")(spark, d).collect().head
     assert(r.getAs[Long]("n_users") === 5L)
     assert(r.getAs[Long]("top20_events") === 80L)
     assert(r.getAs[Double]("top20_share") === 0.8)
@@ -525,7 +525,7 @@ class StatSpec extends SparkSpec {
       (3L, "delta epsilon", "en", "srcC", 20L)      // disjoint from both
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("t_source_vocab_overlap")(spark, d).collect()
+    val rows = SparkEntry.queries("t_source_vocab_overlap")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Double]("jaccard")).toMap
     assert(rows(("srcA", "srcB")) === 1.0)
     assert(!rows.contains(("srcA", "srcC"))) // zero intersection never joins
@@ -542,7 +542,7 @@ class StatSpec extends SparkSpec {
         (6 to 10).map(i => (i.toLong, vec(0, 1.0f), 1))    // near, wrong label
       ).toDF("vec_id", "embedding", "label")
     val d = fixture("embeddings" -> emb)
-    val r = StatQueries.queries("a_ann_prefilter")(spark, d).collect()
+    val r = SparkEntry.queries("a_ann_prefilter")(spark, d).collect()
       .find(_.getAs[Long]("qid") == 0L).get
     assert(r.getAs[Long]("n_pre") === 5L)    // pre-filter still finds 5
     assert(r.getAs[Long]("n_post") === 0L)   // post-filter finds none
@@ -557,7 +557,7 @@ class StatSpec extends SparkSpec {
         ts(f"2026-01-${4 + u}%02d 10:0$i:00"), u.toLong, "view", u.toDouble, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val rows = StatQueries.queries("q_rfm_segmentation")(spark, d).collect()
+    val rows = SparkEntry.queries("q_rfm_segmentation")(spark, d).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getAs[Long]("n_users")).toMap
     assert(rows === (1 to 5).map(q => (q, q, q) -> 1L).toMap)
   }
@@ -567,7 +567,7 @@ class StatSpec extends SparkSpec {
     val same = Seq.tabulate(8)(i => (i.toLong, v, 0))
       .toDF("vec_id", "embedding", "label")
     val d1 = fixture("embeddings" -> same)
-    val r1 = StatQueries.queries("a_centroid_drift")(spark, d1).collect().head
+    val r1 = SparkEntry.queries("a_centroid_drift")(spark, d1).collect().head
     assert(r1.getAs[Double]("l2_drift") === 0.0)
     assert(r1.getAs[Double]("centroid_cosine") === 1.0)
     // odd ids shifted by +1 in every dim: drift = sqrt(4*1) = 2
@@ -575,7 +575,7 @@ class StatSpec extends SparkSpec {
       val w = if (i % 2 == 0) v else v.map(_ + 1.0f); (i.toLong, w, 0)
     }.toDF("vec_id", "embedding", "label")
     val d2 = fixture("embeddings" -> shifted)
-    val r2 = StatQueries.queries("a_centroid_drift")(spark, d2).collect().head
+    val r2 = SparkEntry.queries("a_centroid_drift")(spark, d2).collect().head
     assert(r2.getAs[Double]("l2_drift") === 2.0)
   }
 
@@ -587,7 +587,7 @@ class StatSpec extends SparkSpec {
       (4L, ts("2026-01-05 10:00:00"), 2L, "view", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val rows = StatQueries.queries("q_active_days_histogram")(spark, d).collect()
+    val rows = SparkEntry.queries("q_active_days_histogram")(spark, d).collect()
       .map(r => r.getAs[Long]("active_days") -> r.getAs[Long]("n_users")).toMap
     assert(rows === Map(1L -> 1L, 2L -> 1L))
   }
@@ -600,14 +600,14 @@ class StatSpec extends SparkSpec {
       (i.toLong, Array.tabulate(64)(j => 1.0f + 0.01f * ((i + j) % 3)), 0)
     }.toDF("vec_id", "embedding", "label")
     val d = fixture("embeddings" -> emb)
-    val r = StatQueries.queries("a_ann_mrr")(spark, d).collect().head
+    val r = SparkEntry.queries("a_ann_mrr")(spark, d).collect().head
     // fixed-count query sample (20 hash-minimal ids): with 8 fixture
     // vectors, every vector is a query
     assert(r.getAs[Long]("n_queries") === 8L)
     val mrr = r.getAs[Double]("mrr")
     assert(mrr > 0.0 && mrr <= 1.0)
     // deterministic across runs
-    val again = StatQueries.queries("a_ann_mrr")(spark, d).collect().head
+    val again = SparkEntry.queries("a_ann_mrr")(spark, d).collect().head
     assert(again.getAs[Double]("mrr") === mrr)
   }
 
@@ -622,7 +622,7 @@ class StatSpec extends SparkSpec {
       (6L, ts("2026-01-06 10:00:00"), 2L, "purchase", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val rows = StatQueries.queries("q_basket_affinity")(spark, d).collect()
+    val rows = SparkEntry.queries("q_basket_affinity")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getAs[Long]("n_both"), r.getAs[Double]("confidence"), r.getAs[Double]("lift")))).toMap
     // click < view lexicographically: pair is (click, view)
@@ -639,7 +639,7 @@ class StatSpec extends SparkSpec {
       (4L, "an entirely different document about something else entirely", "en", "src0", 60L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val r = StatQueries.queries("d_dedup_funnel")(spark, d).collect().head
+    val r = SparkEntry.queries("d_dedup_funnel")(spark, d).collect().head
     assert(r.getAs[Long]("n_raw") === 4L)
     assert(r.getAs[Long]("n_after_exact") === 3L)
     assert(r.getAs[Long]("n_after_neardup") === 2L)
@@ -672,7 +672,7 @@ class StatSpec extends SparkSpec {
       (4L, ts("2026-01-05 10:00:00"), 2L, "view", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = fixture("events" -> ev)
-    val r = StatQueries.queries("q_disorder_profile")(spark, d).collect().head
+    val r = SparkEntry.queries("q_disorder_profile")(spark, d).collect().head
     assert(r.getAs[Long]("n_events") === 4L)
     assert(r.getAs[Long]("n_late") === 1L)
     assert(r.getAs[Long]("max_late_us") === 6L * 60 * 1000000)
@@ -687,7 +687,7 @@ class StatSpec extends SparkSpec {
       (2L, noStops, "en", "src0", 100L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("t_gopher_ablation")(spark, d).collect()
+    val rows = SparkEntry.queries("t_gopher_ablation")(spark, d).collect()
       .map(r => r.getString(0) -> ((r.getAs[Long]("n_fail"), r.getAs[Long]("n_sole_fail")))).toMap
     assert(rows("stopwords") === ((1L, 1L))) // doc 2, and only rule stopwords
     assert(rows("words") === ((0L, 0L)))
@@ -704,7 +704,7 @@ class StatSpec extends SparkSpec {
         "en", "src0", 80L))
       ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("d_banding_sweep")(spark, d).collect()
+    val rows = SparkEntry.queries("d_banding_sweep")(spark, d).collect()
       .map(r => r.getAs[Long]("bands") -> ((r.getAs[Long]("n_pairs"), r.getAs[Long]("n_both"))))
       .toMap
     assert(rows.keySet === Set(2L, 4L, 8L))
@@ -721,14 +721,14 @@ class StatSpec extends SparkSpec {
       (4L, "another unrelated document discussing parquet encodings and column pruning strategies", "en", "src0", 80L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = fixture("documents" -> docsDf)
-    val rows = StatQueries.queries("a_contrastive_pairs")(spark, d).collect()
+    val rows = SparkEntry.queries("a_contrastive_pairs")(spark, d).collect()
     assert(rows.nonEmpty, "planted near-dup pair must surface")
     rows.foreach { r =>
       val (a, p, n) = (r.getLong(0), r.getLong(1), r.getLong(2))
       assert(Set(a, p) === Set(1L, 2L))
       assert(n === 3L || n === 4L)
     }
-    val again = StatQueries.queries("a_contrastive_pairs")(spark, d).collect()
+    val again = SparkEntry.queries("a_contrastive_pairs")(spark, d).collect()
     assert(rows.map(_.toSeq).toSeq === again.map(_.toSeq).toSeq)
   }
 }
